@@ -426,13 +426,11 @@ def run_scaled_ivf(spark, sf10x_dir: str) -> dict:
     return out
 
 
-def run_crawl(spark, n_hosts: int, seen_table: str | None = None) -> dict:
+def run_crawl(spark, n_hosts: int) -> dict:
     """Full pipeline: submit → BFS to exhaustion → image fetch/decode.
     World generation and caching are setup (untimed); the timed window is
-    the frontier expansion + the fetch/decode stage.  ``seen_table`` runs
-    the crawl in durable-table mode (bucketed seen_store ground truth,
-    per-round appends) — the end-to-end cost of durability vs the
-    in-memory delta chain."""
+    the frontier expansion + the fetch/decode stage.  No checkpoints: the
+    seen set stays an in-memory union (``seen_mode`` "df")."""
     from pyspark.sql import functions as F
 
     from od_database_spark import schema
@@ -456,7 +454,6 @@ def run_crawl(spark, n_hosts: int, seen_table: str | None = None) -> dict:
         accepted,
         use_bloom=os.environ.get("ODDB_BENCH_BLOOM", "1") == "1",
         expected_total_urls=max(n_pages * 2, 10_000),
-        seen_table=seen_table,
     )
     urls_fetched = 0
     image_url_dfs = []
@@ -494,12 +491,10 @@ def run_crawl(spark, n_hosts: int, seen_table: str | None = None) -> dict:
     ).count()
     verify_s = time.time() - t2
 
-    if seen_table is not None:
-        spark.sql(f"DROP TABLE IF EXISTS {seen_table}")
     return {
         "hosts": n_hosts,
         "pages": n_pages,
-        "seen_mode": "table" if seen_table else "df",
+        "seen_mode": "df",
         "rounds": rounds,
         "urls_fetched": urls_fetched,
         "crawl_sec": round(crawl_s, 2),
@@ -803,8 +798,7 @@ def main() -> None:
             extra_conf=conf,
         )
         if args.crawl:
-            tbl = "seen_bench_crawl" if args.seen_mode == "table" else None
-            print(json.dumps(run_crawl(spark, args.hosts, seen_table=tbl)), flush=True)
+            print(json.dumps(run_crawl(spark, args.hosts)), flush=True)
         elif args.fetch:
             print(json.dumps(run_fetch_throughput(spark, args.images)), flush=True)
         elif args.sf10x:

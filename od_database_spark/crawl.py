@@ -6,9 +6,11 @@ views.py/tasks.py) as one resumable batch pipeline.
     result = crawl.run(spark, seeds_df, pages, robots, blacklist,
                        ckpt_dir="/data/ckpt")
 
-Each round is checkpointed (frontier/seen parquet + lineage manifests +
-metrics) before the next begins, so a killed run resumes exactly where it
-stopped (``resume=True``).
+Each round is checkpointed before the next begins: the frontier as parquet,
+the round's new URLs appended to the ckpt dir's bucketed seen table
+(operators/seen_store.py, the single durable seen set), lineage manifests
+and metrics.  A killed run resumes exactly where it stopped
+(``resume=True``).
 """
 
 from __future__ import annotations
@@ -48,7 +50,6 @@ def run(
     expected_total_urls: int = 1_000_000,
     fetch: bool = True,
     compact_every: int = 8,
-    seen_table: str | None = None,
 ) -> CrawlResult:
     """Submit the seed list (full dedup chain), run BFS rounds under the
     politeness budget until the frontier drains, then fetch+decode the
@@ -58,12 +59,10 @@ def run(
     disallow_prefixes) or RAW fetched bodies (host, robots_txt) — raw input
     is parsed natively through functions.robots.parse_robots.
 
-    ``seen_table`` switches the durable seen set to a BUCKETED catalog
-    table (operators/seen_store.py): rounds append their new urls stamped
-    with the round number, the exact anti-join reads the table co-located
-    (zero seen-side shuffle even off the bloom fallback path), and a resume
-    reconstructs the seen set from the table bounded at the last committed
-    round instead of unioning per-round delta parquet."""
+    With ``ckpt_dir`` set, the seen set after each round is the dir's
+    bucketed seen table, so the exact anti-join reads it co-located (zero
+    seen-side shuffle even off the bloom fallback path), and a resume
+    reads it bounded at the last committed round."""
     if "robots_txt" in robots.columns:
         from .functions.robots import parse_robots
 
@@ -76,8 +75,7 @@ def run(
         empty = spark.createDataFrame([], schema.SEEN)
         accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
         state = fr.initial_state(
-            accepted, use_bloom=use_bloom, expected_total_urls=expected_total_urls,
-            seen_table=seen_table,
+            accepted, use_bloom=use_bloom, expected_total_urls=expected_total_urls
         )
 
     urls_fetched = 0
@@ -124,8 +122,8 @@ def run(
                 },
             )
             if compact_every and state.round_no > 0 and state.round_no % compact_every == 0:
-                # bound the loader's delta-file fan-in on long crawls; the
-                # in-memory state points at dirs compaction deletes, so
+                # bound the seen table's file count on long crawls; the
+                # in-memory state reads the generation compaction drops, so
                 # reload from the surviving round
                 fr.compact_checkpoints(spark, ckpt_dir)
                 state = fr.load_checkpoint(spark, ckpt_dir)

@@ -109,8 +109,9 @@ def fold_ascii_col(col: Column) -> Column:
     [U+00C0, U+FFFF] is a fold fixpoint — one rlike scan skips the
     ~17-replace + translate chain for such rows (the common case on
     ASCII-heavy corpora; rows with foldable characters pay one extra scan).
-    Surrogate halves of astral characters fall inside the guard range, so
-    any non-BMP text conservatively takes the full chain."""
+    The regex matches whole code points, so an astral (non-BMP) character
+    never matches the guard — safe because astral code points are never
+    fold sources (the <= 0xFFFF assert above enforces it)."""
     out = col
     for ch in sorted(FOLD_MULTI):
         out = F.replace(out, F.lit(ch), F.lit(FOLD_MULTI[ch]))

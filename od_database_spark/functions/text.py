@@ -51,11 +51,6 @@ def truncate_path(path: str, max_len: int) -> str:
     return ".../" + path.rsplit("/", maxsplit=1)[1]
 
 
-def format_date_col(ts: Column) -> Column:
-    """X7 (template_filters.py:13-19): render a timestamp for display."""
-    return F.date_format(ts, "yyyy-MM-dd HH:mm:ss")
-
-
 def format_duration_col(seconds: Column) -> Column:
     """X7 (template_filters.py:22-35): humanized duration."""
     return (

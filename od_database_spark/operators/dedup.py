@@ -339,7 +339,11 @@ def connected_components(
             # exchange+job per iteration)
             prop = (
                 labels.withColumn("_old", F.col("comp"))
-                .unionByName(incoming.withColumn("_old", F.lit(None).cast("long")))
+                .unionByName(
+                    incoming.withColumn(
+                        "_old", F.lit(None).cast(labels.schema["comp"].dataType)
+                    )
+                )
                 .groupBy("doc_id")
                 .agg(F.min("comp").alias("comp"), F.max("_old").alias("_old"))
             )

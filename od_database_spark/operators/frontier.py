@@ -25,7 +25,11 @@ Scale notes (10^10 frontier):
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import shutil
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -134,7 +138,9 @@ def resolve_intra_batch(passed: DataFrame, depths: list | None = None) -> DataFr
     domain can pass it (any superset of the occurring values is safe — an
     empty level is a no-op) to skip the distinct-depth discovery job, one
     full evaluation of the batch (r6, guide §1.2: don't compute what the
-    caller already knows).  Default None preserves the discovery pass.
+    caller already knows).  Default None preserves the discovery pass.  A
+    row whose depth is missing from ``depths`` would match no level and
+    vanish, so it fails the call instead.
     """
     # earliest-submit winner per canonical URL via min(struct(...)) — the
     # aggregation partial-combines map-side so duplicate URLs collapse
@@ -144,6 +150,21 @@ def resolve_intra_batch(passed: DataFrame, depths: list | None = None) -> DataFr
     # first row; remaining fields only break (impossible) seq ties
     # deterministically.
     others = [c for c in passed.columns if c not in ("canon_url", "submit_seq")]
+    cols = {c: F.col(f"_w.{c}") for c in passed.columns}
+    cols["canon_url"] = F.col("canon_url")
+    if depths is not None:
+        # checked in the cached projection: the cache build evaluates it on
+        # every row, so the guard costs no extra job
+        cols["depth"] = F.when(
+            cols["depth"].isin(list(depths)), cols["depth"]
+        ).otherwise(
+            F.raise_error(
+                F.format_string(
+                    "resolve_intra_batch: depth %s of %s is not in depths=%s",
+                    cols["depth"], F.col("canon_url"), F.lit(str(sorted(depths))),
+                )
+            )
+        )
     uniq = (
         passed.groupBy("canon_url")
         .agg(
@@ -151,12 +172,7 @@ def resolve_intra_batch(passed: DataFrame, depths: list | None = None) -> DataFr
                 F.struct(F.col("submit_seq"), *[F.col(c) for c in others])
             ).alias("_w")
         )
-        .select(
-            *[
-                F.col(c) if c == "canon_url" else F.col(f"_w.{c}").alias(c)
-                for c in passed.columns
-            ]
-        )
+        .select(*[cols[c].alias(c) for c in passed.columns])
     )
     uniq = uniq.cache()
     if depths is None:
@@ -238,25 +254,16 @@ class CrawlState:
     seen: DataFrame  # schema.SEEN
     next_seq: int
     bloom: "seen_ops.PartitionedBloom | None" = None
-    # new seen rows since the last DURABLE checkpoint: checkpoint() writes
-    # only this delta (O(new-urls) per round, not O(all-urls-ever) — the
-    # difference between linear and quadratic total checkpoint I/O at 10^10)
+    # new seen rows since the last DURABLE checkpoint: checkpoint() appends
+    # only these to the seen table (O(new-urls) per round, not
+    # O(all-urls-ever) — the difference between linear and quadratic total
+    # checkpoint I/O at 10^10)
     seen_delta: "DataFrame | None" = None
     # operational run identity: stamped into every round's meta and the
     # ckpt_dir's _RUN file so a loader can detect (and refuse) round dirs
     # left behind by a DIFFERENT run in a reused ckpt_dir — silently
-    # unioning a stale run's seen deltas re-crawls or wrongly skips URLs
+    # resuming a stale run's rounds re-crawls or wrongly skips URLs
     run_id: str | None = None
-    # seen-table mode (operators/seen_store.py): when set, the durable seen
-    # set is this BUCKETED catalog table instead of per-round delta parquet
-    # — each round appends its new urls stamped with the round number
-    # (BEFORE the round's .done marker, so a torn round's rows are excluded
-    # by the resume's round_no bound), and the exact anti-join reads the
-    # table co-located: the seen side crosses ZERO exchanges even when the
-    # bloom's maybe-seen sliver outgrows the broadcast gate.  seen_delta
-    # then holds only THIS round's new rows (for the lineage manifest);
-    # every round is already durable.
-    seen_table: str | None = None
 
 
 def initial_state(
@@ -264,7 +271,6 @@ def initial_state(
     use_bloom: bool = False,
     expected_total_urls: int = 1_000_000,
     bloom_parts: int = 64,
-    seen_table: str | None = None,
 ) -> CrawlState:
     """Round-0 state from accepted submissions: every accepted root enters the
     frontier (depth 0) and the seen set, ordered by (priority DESC, submit
@@ -272,10 +278,8 @@ def initial_state(
 
     ``use_bloom`` sizes a partitioned bloom for ``expected_total_urls`` and
     maintains it incrementally across rounds (delta build + bitwise OR).
-    ``seen_table`` switches the durable seen set to the bucketed catalog
-    table (operators/seen_store.py) — created here with the seeds at round
-    0 (overwriting any stale table at the name; a surviving uncatalogued
-    one is re-registered first so the overwrite can commit)."""
+    Nothing is durable yet: the first checkpoint() writes the seeds to the
+    ckpt dir's seen table together with that round's discoveries."""
     ordered = packed_seq(
         accepted.select(
             "url", "url_hash", "website_id", "host", "priority",
@@ -289,23 +293,10 @@ def initial_state(
         F.col("priority").cast("int"), F.col("depth").cast("int"), "discovery_seq",
     )
     seen = frontier.select("url", "url_hash")
-    import uuid
-
-    if seen_table is not None:
-        from . import seen_store
-
-        spark = accepted.sparkSession
-        # a fresh run OWNS the name: re-register surviving files (so the
-        # overwrite below can commit instead of LOCATION_ALREADY_EXISTS),
-        # then overwrite with round-0 state
-        seen_store.recover_seen_table(spark, seen_table)
-        seen_store.create_seen_table(seen, seen_table, round_no=0)
-        seen = seen_store.seen_view(spark, seen_table, 0)
     state = CrawlState(
         round_no=0, frontier=frontier, seen=seen, next_seq=0,
-        seen_delta=frontier.select("url", "url_hash"),
+        seen_delta=seen,
         run_id=uuid.uuid4().hex[:12],  # operational marker, not a data id
-        seen_table=seen_table,
     )
     if use_bloom:
         geom = seen_ops.PartitionedBloom.params_for(
@@ -315,24 +306,6 @@ def initial_state(
             seen, n_parts=bloom_parts, geometry=geom
         )
     return state
-
-
-def politeness_rank(frontier: DataFrame, robots: DataFrame, round_seconds: int = ROUND_SECONDS) -> DataFrame:
-    """Select this round's fetch set: per-host window ranked by
-    (priority DESC, discovery_seq ASC), capped at the host's crawl-delay
-    budget (C5+C9).  Unselected rows carry over to the next round.
-
-    Returns the frontier with ``_rank`` and ``_budget`` columns attached.
-    (Simple exact form — the skew-safe two-phase variant used by
-    expand_round is ``politeness_select``.)
-    """
-    budgeted = frontier.join(F.broadcast(robots.select("host", "crawl_delay")), on="host", how="left")
-    budgeted = budgeted.withColumn(
-        "_budget",
-        F.floor(F.lit(round_seconds) / F.coalesce(F.col("crawl_delay"), F.lit(1.0))).cast("int"),
-    ).drop("crawl_delay")
-    w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("discovery_seq"))
-    return budgeted.withColumn("_rank", F.row_number().over(w))
 
 
 def politeness_select(
@@ -574,7 +547,7 @@ def expand_round(
     # eager localCheckpoint per round keeps the next round's window/rank plan
     # shallow; the seen set stays a flat union of per-round checkpointed
     # deltas (numbered is checkpointed inside dense_seq) — linear plan, no
-    # per-round copy.  Durable cuts happen in checkpoint() (parquet).
+    # per-round copy.  Durable cuts happen in checkpoint().
     next_frontier = carry.unionByName(
         numbered.select("url", "url_hash", "website_id", "host", "priority", "depth", "discovery_seq")
     ).localCheckpoint(eager=True)
@@ -604,30 +577,13 @@ def expand_round(
         state.frontier.unpersist()
     except Exception:
         pass
+    # the seen set grows as an in-memory union until checkpoint() makes the
+    # delta durable and reloads it as the bucketed seen-table view
     new_rows = numbered.select("url", "url_hash")
-    if state.seen_table is not None:
-        from . import seen_store
-
-        # durable append of the round's new urls, stamped with the round it
-        # belongs to — this runs BEFORE checkpoint() writes the round's
-        # .done marker, so a crash in between leaves rows a resume's
-        # round_no bound excludes (the re-run re-appends; duplicate rows
-        # are harmless to the left_anti).  One write job per round — the
-        # table-mode equivalent of the seen-delta parquet checkpoint write,
-        # paid here instead of in checkpoint().
-        spark = state.frontier.sparkSession
-        seen_store.append_seen(
-            new_rows, state.seen_table, round_no=state.round_no + 1
-        )
-        new_seen = seen_store.seen_view(spark, state.seen_table, state.round_no + 1)
-        new_delta = new_rows  # this round only (already durable; lineage)
-    else:
-        new_seen = state.seen.unionByName(new_rows)
-        new_delta = (
-            new_rows
-            if state.seen_delta is None
-            else state.seen_delta.unionByName(new_rows)
-        )
+    new_seen = state.seen.unionByName(new_rows)
+    new_delta = (
+        new_rows if state.seen_delta is None else state.seen_delta.unionByName(new_rows)
+    )
 
     bloom = state.bloom
     if bloom is not None:
@@ -649,7 +605,6 @@ def expand_round(
         bloom=bloom,
         seen_delta=new_delta,
         run_id=state.run_id,
-        seen_table=state.seen_table,
     )
     return next_state, fetched, image_urls
 
@@ -715,21 +670,27 @@ def _lineage_manifest(df: DataFrame, round_no: int, table: str) -> DataFrame:
 
 def checkpoint(state: CrawlState, ckpt_dir: str, metrics: dict | None = None) -> CrawlState:
     """Persist one round's state; the `.done` marker commits it atomically
-    (parquet dirs are written before the marker exists).  The task-tracker
+    (everything is written before the marker exists).  The task-tracker
     lease/reassign loop (tasks.py:93-112, max_assign_time) collapses into
     this: an interrupted round simply re-runs from the last marker.
 
-    The seen set is written as a DELTA (new urls since the previous durable
-    checkpoint), never as a full copy: per-round checkpoint I/O is
-    O(delta), so total I/O over a crawl is O(total urls) instead of
-    O(total × rounds) — at a 10^10-URL frontier the full-copy form writes
-    petabytes of duplicates.  Loaders union the deltas of every completed
-    round (load_checkpoint).
+    The durable seen set is ONE bucketed catalog table per ckpt dir
+    (operators/seen_store.py), named by the dir's ``_SEEN_TABLE`` pointer.
+    Each checkpoint appends only ``state.seen_delta`` (the rows not yet
+    durable), stamped with the round number: per-round I/O is O(delta),
+    never a full copy.  The append lands BEFORE the `.done` marker, so a
+    crash in between leaves rows a resume's ``round_no <=`` bound excludes
+    (the re-run re-appends; duplicate rows are harmless to the left_anti).
+    The first checkpoint into a dir derives the table name from the dir,
+    overwrites whatever a dead run left at that name, then writes the
+    pointer.
 
     Alongside the state, writes per-partition lineage manifests (which
     partitions contributed how many rows, with content-derived tokens) and an
     optional metrics row — the north rule's lineage + metrics contract.
     """
+    from . import seen_store
+
     rd = os.path.join(ckpt_dir, f"round_{state.round_no:05d}")
     spark = state.frontier.sparkSession
     run_id = _establish_run(ckpt_dir, state.run_id)
@@ -739,18 +700,19 @@ def checkpoint(state: CrawlState, ckpt_dir: str, metrics: dict | None = None) ->
         else spark.createDataFrame([], schema.SEEN)
     )
     state.frontier.write.mode("overwrite").parquet(os.path.join(rd, "frontier"))
-    if state.seen_table is None:
-        delta.write.mode("overwrite").parquet(os.path.join(rd, "seen_delta"))
-        delta_tbl = "seen_delta"
+    table = _read_pointer(ckpt_dir, "_SEEN_TABLE")
+    if table is None:
+        # this dir owns the derived name: re-register surviving files (so
+        # the overwrite can commit instead of LOCATION_ALREADY_EXISTS), then
+        # overwrite; the pointer is written only once the table exists
+        table = _derived_seen_table(ckpt_dir)
+        seen_store.recover_seen_table(spark, table)
+        seen_store.create_seen_table(delta, table, round_no=state.round_no)
+        _write_pointer(ckpt_dir, "_SEEN_TABLE", table)
     else:
-        # the durable seen write already happened (expand_round's per-round
-        # table append, stamped with the round); record the table pointer so
-        # the loader reconstructs from it — the lineage manifest below still
-        # covers this round's appended rows
-        _establish_seen_table(ckpt_dir, state.seen_table)
-        delta_tbl = "seen_append"
+        seen_store.append_seen(delta, table, round_no=state.round_no)
     lineage = _lineage_manifest(state.frontier, state.round_no, "frontier").unionByName(
-        _lineage_manifest(delta, state.round_no, delta_tbl)
+        _lineage_manifest(delta, state.round_no, "seen_append")
     )
     lineage.write.mode("overwrite").parquet(os.path.join(rd, "lineage"))
     spark.createDataFrame(
@@ -764,27 +726,44 @@ def checkpoint(state: CrawlState, ckpt_dir: str, metrics: dict | None = None) ->
         ).write.mode("overwrite").parquet(os.path.join(rd, "metrics"))
     with open(os.path.join(rd, ".done"), "w") as f:
         f.write("ok")
-    # reload from disk so downstream plans read the compact files instead of
-    # dragging the whole lineage DAG across rounds
+    # reload from disk so downstream plans read the bucketed table and the
+    # frontier files instead of dragging the whole lineage DAG across rounds
     return load_checkpoint(spark, ckpt_dir, state.round_no)
+
+
+def _derived_seen_table(ckpt_dir: str) -> str:
+    """Seen-table name owned by one ckpt dir: distinct dirs never share a
+    table, and the same dir always maps to the same name."""
+    digest = hashlib.sha1(os.path.abspath(ckpt_dir).encode()).hexdigest()
+    return f"seen_{digest[:16]}"
+
+
+def _read_pointer(ckpt_dir: str, name: str) -> str | None:
+    ptr = os.path.join(ckpt_dir, name)
+    if not os.path.isfile(ptr):
+        return None
+    with open(ptr) as f:
+        return f.read().strip() or None
+
+
+def _write_pointer(ckpt_dir: str, name: str, value: str) -> None:
+    """Atomic pointer-file write (tmp + rename): readers see the old value
+    or the new one, never a torn one."""
+    ptr = os.path.join(ckpt_dir, name)
+    tmp = ptr + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(value)
+    os.replace(tmp, ptr)
 
 
 def _establish_run(ckpt_dir: str, run_id: str | None) -> str:
     """Pin the ckpt_dir to one run via the _RUN pointer file.  A mismatch
     means the dir holds a DIFFERENT run's rounds — refuse rather than let a
-    later resume silently union stale seen deltas."""
+    later resume silently mix in another run's state."""
     os.makedirs(ckpt_dir, exist_ok=True)
-    ptr = os.path.join(ckpt_dir, "_RUN")
-    existing = None
-    if os.path.isfile(ptr):
-        with open(ptr) as f:
-            existing = f.read().strip() or None
+    existing = _read_pointer(ckpt_dir, "_RUN")
     if run_id is None:
-        run_id = existing
-    if run_id is None:
-        import uuid
-
-        run_id = uuid.uuid4().hex[:12]
+        run_id = existing or uuid.uuid4().hex[:12]
     if existing is not None and existing != run_id:
         raise ValueError(
             f"{ckpt_dir} belongs to run {existing!r}, not {run_id!r}: it holds "
@@ -792,74 +771,31 @@ def _establish_run(ckpt_dir: str, run_id: str | None) -> str:
             "clean ckpt_dir."
         )
     if existing is None:
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(run_id)
-        os.replace(tmp, ptr)
+        _write_pointer(ckpt_dir, "_RUN", run_id)
     return run_id
 
 
-def _establish_seen_table(ckpt_dir: str, table: str) -> str:
-    """Pin the ckpt_dir's seen ground truth to one catalog table via the
-    _SEEN_TABLE pointer (the _RUN pattern): a mismatch means the dir's
-    rounds were committed against a DIFFERENT table — refuse rather than
-    resume with the wrong seen set."""
-    ptr = os.path.join(ckpt_dir, "_SEEN_TABLE")
-    if os.path.isfile(ptr):
-        with open(ptr) as f:
-            existing = f.read().strip()
-        if existing != table:
-            raise ValueError(
-                f"{ckpt_dir} was checkpointed against seen table {existing!r}, "
-                f"not {table!r} — refusing to mix seen ground truths."
-            )
-        return existing
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(table)
-    os.replace(tmp, ptr)
+def _seen_table_of(ckpt_dir: str) -> str:
+    """The ckpt dir's seen table.  A dir without the pointer was never
+    checkpointed, or predates the seen-table layout (per-round seen_delta
+    parquet, no longer read) — raise rather than resume with an EMPTY seen
+    set, which would re-admit every URL ever crawled."""
+    table = _read_pointer(ckpt_dir, "_SEEN_TABLE")
+    if table is None:
+        raise FileNotFoundError(
+            f"{ckpt_dir} has no _SEEN_TABLE pointer: it holds no seen table "
+            "(an old per-round seen_delta layout is not readable). Re-crawl "
+            "into a clean ckpt_dir."
+        )
     return table
 
 
-def _seen_table_of(ckpt_dir: str) -> str | None:
-    ptr = os.path.join(ckpt_dir, "_SEEN_TABLE")
-    if not os.path.isfile(ptr):
-        return None
-    with open(ptr) as f:
-        return f.read().strip() or None
-
-
-def _write_seen_floor(ckpt_dir: str, floor: int) -> None:
-    """Record the seen-table compaction floor: generation compaction stamps
-    every surviving row with the latest round, so an explicit
-    load_checkpoint(round_no < floor) can no longer reconstruct that
-    round's seen set (the round_no <= bound filter would silently yield an
-    EMPTY one).  Written BEFORE the _SEEN_TABLE pointer flips — a crash in
-    between leaves an over-strict floor with the old generation still
-    live, which errs on raising, never on re-admitting seen URLs (the
-    delta path's .compacted-marker invariant, table-mode form)."""
-    ptr = os.path.join(ckpt_dir, "_SEEN_FLOOR")
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(int(floor)))
-    os.replace(tmp, ptr)
-
-
-def _seen_floor_of(ckpt_dir: str) -> int | None:
-    ptr = os.path.join(ckpt_dir, "_SEEN_FLOOR")
-    if not os.path.isfile(ptr):
-        return None
-    with open(ptr) as f:
-        raw = f.read().strip()
-    return int(raw) if raw else None
-
-
 def compact_seen_table(spark: SparkSession, ckpt_dir: str) -> str:
-    """Generation compaction for table-mode checkpoints: per-round appends
-    add one file set per bucket, so a 1000-round crawl's seen table holds
-    64k small files.  Rewrite everything ≤ the latest committed round into
-    a fresh single-generation table (``<base>__g{n}``), flip the ckpt dir's
-    ``_SEEN_TABLE`` pointer atomically, then drop the old generation.
+    """Generation compaction: per-round appends add one file set per bucket,
+    so a 1000-round crawl's seen table holds 64k small files.  Rewrite
+    everything ≤ the latest committed round into a fresh single-generation
+    table (``<base>__g{n}``), flip the ckpt dir's ``_SEEN_TABLE`` pointer
+    atomically, then drop the old generation.
 
     Crash-safe at every step: the new generation is fully committed before
     the pointer flips (a crash before the flip leaves the old table live
@@ -867,117 +803,49 @@ def compact_seen_table(spark: SparkSession, ckpt_dir: str) -> str:
     after the flip but before the drop leaves a dead old generation that
     the next compaction's DROP IF EXISTS clears.  Callers holding a live
     CrawlState must reload from the checkpoint afterwards (crawl.run's
-    compaction branch does) — the state's table name is stale once the
-    pointer moves."""
-    import re as _re
+    compaction branch does) — the state reads the old generation.
 
+    Generation compaction stamps every surviving row with the latest round,
+    so a load of an older round could no longer reconstruct its seen set
+    (the ``round_no <=`` bound would yield an EMPTY one).  The ``_SEEN_FLOOR``
+    pointer, written BEFORE ``_SEEN_TABLE`` flips, makes such a load raise; a
+    crash in between leaves an over-strict floor with the old generation
+    still live, which errs on raising, never on re-admitting seen URLs."""
     from . import seen_store
+    from .ann_store import _fs, _table_dir
 
     table = _seen_table_of(ckpt_dir)
-    if table is None:
-        raise ValueError(f"{ckpt_dir} has no _SEEN_TABLE pointer (not table mode)")
     latest = latest_round(ckpt_dir)
     if latest is None:
         raise FileNotFoundError(f"no completed round under {ckpt_dir}")
-    m = _re.match(r"^(.*?)(?:__g(\d+))?$", table)
+    m = re.match(r"^(.*?)(?:__g(\d+))?$", table)
     base, gen = m.group(1), int(m.group(2) or 0)
     new_table = f"{base}__g{gen + 1}"
     if not seen_store.recover_seen_table(spark, table):
         raise FileNotFoundError(f"seen table {table!r} has no surviving state")
     seen_store.compact_into_generation(spark, table, new_table, latest)
-    # floor first (see _write_seen_floor): the window between the two
-    # writes is fail-raise, never fail-empty
-    _write_seen_floor(ckpt_dir, latest)
-    ptr = os.path.join(ckpt_dir, "_SEEN_TABLE")
-    tmp = ptr + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(new_table)
-    os.replace(tmp, ptr)  # the commit point
+    _write_pointer(ckpt_dir, "_SEEN_FLOOR", str(latest))
+    _write_pointer(ckpt_dir, "_SEEN_TABLE", new_table)  # the commit point
     # previous generation is dead once the pointer moved.  A RECOVERED old
     # table is EXTERNAL (CREATE ... LOCATION), so DROP alone leaves its
     # files — delete the location through the FS API as well (no-op for a
     # managed drop that already removed it).
     spark.sql(f"DROP TABLE IF EXISTS {table}")
-    from .ann_store import _fs, _table_dir
-
-    loc = _table_dir(spark, table)
-    fs, jpath = _fs(spark, loc)
+    fs, jpath = _fs(spark, _table_dir(spark, table))
     fs.delete(jpath, True)
     return new_table
 
 
-def _recover_compacting_delta(rd: str) -> None:
-    """Heal a compaction interrupted anywhere inside its swap window:
-
-    - no live seen_delta but seen_delta__compacting finished (_SUCCESS):
-      crash between the two renames — adopt the complete output;
-    - live seen_delta AND seen_delta__old both present: crash after the
-      second rename but before the ``.compacted`` marker (or before the old
-      dir's deletion) — live already IS the compacted set, so finish by
-      writing the marker and dropping the old dir.  Without this, a crash
-      in that window left older rounds unfloored and the loader would union
-      the full compacted set PLUS every older delta (duplicated seen rows).
-    """
-    import shutil
-
-    live = os.path.join(rd, "seen_delta")
-    tmp = os.path.join(rd, "seen_delta__compacting")
-    old = os.path.join(rd, "seen_delta__old")
-    marker = os.path.join(rd, ".compacted")
-    if not os.path.isdir(live) and os.path.isfile(os.path.join(tmp, "_SUCCESS")):
-        os.rename(tmp, live)
-        with open(marker, "w") as f:
-            f.write("ok")
-        shutil.rmtree(old, ignore_errors=True)  # dead pre-swap data
-    elif os.path.isdir(live) and os.path.isdir(old):
-        if not os.path.isfile(marker):
-            with open(marker, "w") as f:
-                f.write("ok")
-        shutil.rmtree(old, ignore_errors=True)
-
-
 def compact_checkpoints(spark: SparkSession, ckpt_dir: str) -> int:
-    """Fold every completed round's seen_delta into the LATEST round's delta
-    and drop the older round dirs — the LSM-style compaction that bounds the
-    loader's file fan-in on long crawls (resume-to-latest stays exact; the
-    retention trade is losing resume-to-earlier rounds, the standard
-    checkpoint-retention policy).  Returns the surviving round number.
-
-    Crash-safe at every step: the compacted delta is fully written (Spark
-    _SUCCESS) before the live dir moves; a crash in the swap window is
-    healed by _recover_compacting_delta; the ``.compacted`` marker lands
-    before older rounds are deleted, so a crash mid-deletion can never
-    double-union (the loader skips pre-marker rounds)."""
-    import shutil
-
+    """Fold the seen table's per-round append file sets into a fresh
+    generation (compact_seen_table) and drop the superseded round dirs —
+    the LSM-style compaction that bounds the seen table's file listing on
+    long crawls (resume-to-latest stays exact; the retention trade is losing
+    resume-to-earlier rounds, the standard checkpoint-retention policy).
+    Returns the surviving round number; callers must reload state
+    afterwards — the table name changed."""
+    compact_seen_table(spark, ckpt_dir)
     latest = latest_round(ckpt_dir)
-    if latest is None:
-        raise FileNotFoundError(f"no completed round under {ckpt_dir}")
-    if _seen_table_of(ckpt_dir) is not None:
-        # table mode: fold the per-round append file sets into a fresh
-        # single-generation table (bounds the table's file listing the way
-        # the delta fold bounds the loader's path fan-in), then trim the
-        # superseded round dirs (frontier/meta/lineage of older rounds).
-        # Callers must reload state afterwards — the table name changed.
-        compact_seen_table(spark, ckpt_dir)
-        for d in os.listdir(ckpt_dir):
-            if d.startswith("round_") and int(d.split("_")[1]) < latest:
-                shutil.rmtree(os.path.join(ckpt_dir, d), ignore_errors=True)
-        return latest
-    rd = os.path.join(ckpt_dir, f"round_{latest:05d}")
-    _recover_compacting_delta(rd)
-    state = load_checkpoint(spark, ckpt_dir, latest)  # union of all deltas
-    live = os.path.join(rd, "seen_delta")
-    tmp = os.path.join(rd, "seen_delta__compacting")
-    shutil.rmtree(tmp, ignore_errors=True)  # stale partial from a past crash
-    state.seen.write.mode("overwrite").parquet(tmp)
-    old = os.path.join(rd, "seen_delta__old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live, old)
-    os.rename(tmp, live)  # crash between the renames → recovery adopts tmp
-    with open(os.path.join(rd, ".compacted"), "w") as f:
-        f.write("ok")
-    shutil.rmtree(old, ignore_errors=True)
     for d in os.listdir(ckpt_dir):
         if d.startswith("round_") and int(d.split("_")[1]) < latest:
             shutil.rmtree(os.path.join(ckpt_dir, d), ignore_errors=True)
@@ -1003,24 +871,27 @@ def load_checkpoint(
     expected_total_urls: int = 1_000_000,
     bloom_parts: int = 64,
 ) -> CrawlState:
+    """Resume state at ``round_no`` (default: the latest `.done` round).
+    The seen set is the ckpt dir's seen table bounded at that round — rows
+    a torn round appended past the bound are excluded (file-level prune:
+    round_no is constant per appended file)."""
+    from . import seen_store
+
     if round_no is None:
         round_no = latest_round(ckpt_dir)
         if round_no is None:
             raise FileNotFoundError(f"no completed round under {ckpt_dir}")
     rd = os.path.join(ckpt_dir, f"round_{round_no:05d}")
     meta = spark.read.parquet(os.path.join(rd, "meta")).collect()[0]
-    run_ptr = os.path.join(ckpt_dir, "_RUN")
-    if not os.path.isfile(run_ptr):
+    run_id = _read_pointer(ckpt_dir, "_RUN")
+    if run_id is None:
         raise FileNotFoundError(
             f"{ckpt_dir} has no _RUN pointer — pre-run-id checkpoint layout; "
             "re-checkpoint with this version before resuming."
         )
-    with open(run_ptr) as f:
-        run_id = f.read().strip()
-    # every contributing round must (a) be .done, (b) have a readable
-    # seen_delta (a missing one means a pre-delta-format dir or a torn
-    # compaction — RAISE, never silently resume with a wrong seen set), and
-    # (c) belong to THIS run (stale rounds from a prior run in a reused dir)
+    table = _seen_table_of(ckpt_dir)
+    # every .done round up to the loaded one must belong to THIS run (stale
+    # rounds from a prior run in a reused dir)
     done_rounds = sorted(
         int(d.split("_")[1])
         for d in os.listdir(ckpt_dir)
@@ -1028,34 +899,6 @@ def load_checkpoint(
         and int(d.split("_")[1]) <= round_no
         and os.path.exists(os.path.join(ckpt_dir, d, ".done"))
     )
-    seen_table = _seen_table_of(ckpt_dir)
-    if seen_table is None:
-        # heal torn compactions FIRST — adoption writes the `.compacted`
-        # marker, which must be visible before the union floor below
-        for r in done_rounds:
-            _recover_compacting_delta(os.path.join(ckpt_dir, f"round_{r:05d}"))
-        # a `.compacted` round's delta already folds in everything before it;
-        # older rounds (normally deleted — a crash mid-delete can strand
-        # some) must NOT be unioned again
-        compacted = [
-            r
-            for r in done_rounds
-            if os.path.isfile(os.path.join(ckpt_dir, f"round_{r:05d}", ".compacted"))
-        ]
-        floor_round = max(compacted) if compacted else -1
-        delta_dirs = []
-        for r in done_rounds:
-            if r < floor_round:
-                continue
-            rdir = os.path.join(ckpt_dir, f"round_{r:05d}")
-            delta = os.path.join(rdir, "seen_delta")
-            if not os.path.isdir(delta):
-                raise FileNotFoundError(
-                    f"round {r} under {ckpt_dir} is .done but has no seen_delta "
-                    "(pre-delta-format checkpoint or torn compaction) — resuming "
-                    "would silently drop seen URLs."
-                )
-            delta_dirs.append(delta)
     metas = spark.read.parquet(
         *[os.path.join(ckpt_dir, f"round_{r:05d}", "meta") for r in done_rounds]
     ).collect()
@@ -1063,42 +906,30 @@ def load_checkpoint(
     if alien:
         raise ValueError(
             f"rounds {alien} under {ckpt_dir} belong to a different run than "
-            f"_RUN={run_id!r} (reused ckpt_dir) — refusing to union their deltas."
+            f"_RUN={run_id!r} (reused ckpt_dir) — refusing to resume them."
         )
-    if seen_table is not None:
-        # table mode: ground truth is the bucketed catalog table, bounded at
-        # the loaded round — rows a torn round appended past the bound are
-        # excluded by the filter (file-level prune: round_no is constant per
-        # appended file).  Re-register surviving files after session loss.
-        from . import seen_store
-
-        floor = _seen_floor_of(ckpt_dir)
-        if floor is not None and round_no < floor:
-            raise ValueError(
-                f"round {round_no} predates the seen-table compaction floor "
-                f"{floor} under {ckpt_dir}: generation compaction re-stamped "
-                "all rows with the latest round, so this round's seen set no "
-                "longer exists — resuming would run with an EMPTY seen set."
-            )
-        if not seen_store.recover_seen_table(spark, seen_table):
-            raise FileNotFoundError(
-                f"{ckpt_dir} points at seen table {seen_table!r} but neither a "
-                "catalog entry nor surviving files exist — resuming would "
-                "re-admit every URL ever seen."
-            )
-        seen = seen_store.seen_view(spark, seen_table, round_no)
-    elif delta_dirs:
-        seen = spark.read.schema(schema.SEEN).parquet(*delta_dirs)
-    else:
-        seen = spark.createDataFrame([], schema.SEEN)
+    floor = _read_pointer(ckpt_dir, "_SEEN_FLOOR")
+    if floor is not None and round_no < int(floor):
+        raise ValueError(
+            f"round {round_no} predates the seen-table compaction floor "
+            f"{floor} under {ckpt_dir}: generation compaction re-stamped "
+            "all rows with the latest round, so this round's seen set no "
+            "longer exists — resuming would run with an EMPTY seen set."
+        )
+    # re-register surviving files after session loss
+    if not seen_store.recover_seen_table(spark, table):
+        raise FileNotFoundError(
+            f"{ckpt_dir} points at seen table {table!r} but neither a "
+            "catalog entry nor surviving files exist — resuming would "
+            "re-admit every URL ever seen."
+        )
     state = CrawlState(
         round_no=meta["round_no"],
         frontier=spark.read.schema(schema.FRONTIER).parquet(os.path.join(rd, "frontier")),
-        seen=seen,
+        seen=seen_store.seen_view(spark, table, round_no),
         next_seq=meta["next_seq"],
         seen_delta=None,  # everything durable now; next delta starts empty
         run_id=run_id,
-        seen_table=seen_table,
     )
     if use_bloom:
         # the bloom is derived state — rebuild from the durable seen table

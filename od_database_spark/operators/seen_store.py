@@ -1,8 +1,9 @@
-"""Bucketed seen-set table: the co-located-join storage layout for the
-exact anti-join (the bloomless scale path; complements operators/seen.py).
+"""Bucketed seen-set table: the crawl's single durable seen set and the
+co-located-join storage layout for the exact anti-join (complements the
+in-memory filters of operators/seen.py).
 
-The durable seen set is a catalog table BUCKETED BY url_hash (bucketBy +
-sortBy).  With subset co-partitioning enabled (session.py sets
+The seen set is a catalog table BUCKETED BY url_hash (bucketBy + sortBy).
+With subset co-partitioning enabled (session.py sets
 ``spark.sql.requireAllClusterKeysForCoPartition=false``), the exact
 anti-join on (url_hash, url) accepts the table's HashPartitioning(url_hash)
 — the 10^10-row seen side is NEVER shuffled; only the (much smaller)
@@ -10,19 +11,16 @@ candidate batch exchanges, hashed to the bucket layout.  Appends preserve
 the bucket spec, so incremental growth keeps the property.
 
 Rows carry a ``round_no`` column so the table can serve as the crawl
-loop's DURABLE ground truth (frontier.expand_round's seen-table mode):
-each BFS round appends its new urls stamped with the round, and a resume
-reads ``round_no <= last committed round`` — rows appended by a round that
-crashed before its ``.done`` marker are excluded by the filter (and the
-re-run's re-append only duplicates rows, which a left_anti join ignores).
-Every append writes files whose round_no is constant, so the parquet
-min/max footer makes the resume filter a file-level prune, not a scan.
-
-This is the storage-level alternative to the per-round seen-delta parquet
-checkpoints (which reassemble by multi-path scan): one bucketed table,
-queryable any time, zero seen-side shuffle in the anti-join.  Correctness
-is identical either way — the join keys include the full url string, so
-hash collisions can never drop a URL.
+loop's DURABLE ground truth: frontier.checkpoint() is its only writer in
+the crawl, appending each round's new urls stamped with the round before
+the round's ``.done`` marker, and a resume reads ``round_no <= last
+committed round`` — rows appended by a round that crashed before its
+``.done`` marker are excluded by the filter (and the re-run's re-append only
+duplicates rows, which a left_anti join ignores).  Every append writes
+files whose round_no is constant, so the parquet min/max footer makes the
+resume filter a file-level prune, not a scan.  Correctness never depends
+on the hash: the join keys include the full url string, so hash collisions
+can never drop a URL.
 """
 
 from __future__ import annotations
@@ -159,5 +157,5 @@ def compact_into_generation(
     recover_seen_table(spark, new_table, n_buckets)
     rows = seen_view(spark, table, round_no)
     # duplicate rows from torn-round re-appends collapse here too (the
-    # anti-join never cared, but the compacted generation should be clean)
+    # anti-join never cared, but the new generation should be clean)
     create_seen_table(rows.distinct(), new_table, n_buckets, round_no=round_no)

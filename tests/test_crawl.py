@@ -2,7 +2,7 @@
 (BASELINE.json metric: 'crawl-order + URL-seen-set exact match vs reference'),
 plus checkpoint/resume identity (SURVEY.md §5.7) and bloom exactness."""
 
-import shutil
+import os
 import tempfile
 
 import pytest
@@ -15,6 +15,7 @@ from od_database_spark.operators import frontier as fr
 from od_database_spark.operators import seen as seen_ops
 
 from .oracle import Oracle
+from .seen_tables import purge_ckpt, purge_table
 
 N_HOSTS = 30
 MAX_ROUNDS = 12
@@ -49,10 +50,10 @@ def oracle_world(world_dfs):
     return pages_d, robots_d, bl
 
 
-def run_oracle(oracle_world):
+def run_oracle(oracle_world, n_seed_hosts=N_HOSTS):
     pages_d, robots_d, bl = oracle_world
     o = Oracle(pages_d, robots_d, bl)
-    seeds = world.seed_urls(N_HOSTS)
+    seeds = world.seed_urls(n_seed_hosts)
     o.submit([(u, i, 1) for i, u in enumerate(seeds)])
     o.crawl(max_rounds=MAX_ROUNDS)
     return o
@@ -157,7 +158,7 @@ def test_checkpoint_resume_identical(spark, world_dfs, spark_run):
         assert seen_r == seen_b
         assert _flat_order(fetched_r) == _flat_order(fetched_b)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_resume_across_compaction_boundary_identical(spark, world_dfs, spark_run):
@@ -174,15 +175,14 @@ def test_resume_across_compaction_boundary_identical(spark, world_dfs, spark_run
         assert seen_r == seen_b
         assert _flat_order(fetched_r) == _flat_order(fetched_b)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_loader_raises_on_torn_or_alien_checkpoints(spark, world_dfs):
-    """The loader must never silently resume with a wrong seen set: a .done
-    round without a readable seen_delta raises, a ckpt_dir holding another
-    run's rounds raises, and a torn compaction swap self-heals."""
-    import os
-
+    """The loader must never silently resume with a wrong seen set: a ckpt
+    dir whose seen table is gone (no catalog entry, no files) raises, a
+    fresh run refuses to checkpoint over another run's rounds, and a loader
+    pointed at another run's rounds raises."""
     pages, robots, blacklist = world_dfs
     seeds = world.gen_seeds(spark, N_HOSTS)
     empty = spark.createDataFrame([], schema.SEEN)
@@ -193,41 +193,6 @@ def test_loader_raises_on_torn_or_alien_checkpoints(spark, world_dfs):
         for _ in range(2):
             state, _, _ = fr.expand_round(state, pages, robots)
             state = fr.checkpoint(state, ckpt)
-        full_seen = state.seen.count()
-        rd1 = os.path.join(ckpt, "round_00001")
-
-        # torn compaction: complete __compacting output, live delta renamed
-        # away mid-swap — the loader adopts the compacted output and the
-        # seen set stays complete
-        rd2 = os.path.join(ckpt, "round_00002")
-        state.seen.write.parquet(os.path.join(rd2, "seen_delta__compacting"))
-        os.rename(
-            os.path.join(rd2, "seen_delta"), os.path.join(rd2, "seen_delta__old")
-        )
-        healed = fr.load_checkpoint(spark, ckpt)
-        assert healed.seen.count() == full_seen
-        assert os.path.isfile(os.path.join(rd2, ".compacted"))
-
-        # torn compaction, second window: crash AFTER the swap but BEFORE
-        # the .compacted marker — live is already the compacted set and the
-        # old dir lingers; the loader must finish (marker + old cleanup) and
-        # must NOT double-union older rounds
-        compacted_rows = healed.seen.localCheckpoint(eager=True)  # pin off-path
-        os.remove(os.path.join(rd2, ".compacted"))
-        os.rename(
-            os.path.join(rd2, "seen_delta"), os.path.join(rd2, "seen_delta__old")
-        )
-        # live := compacted set (what rename(tmp, live) left); old := pre-swap
-        compacted_rows.write.parquet(os.path.join(rd2, "seen_delta"))
-        healed2 = fr.load_checkpoint(spark, ckpt)
-        assert healed2.seen.count() == full_seen
-        assert os.path.isfile(os.path.join(rd2, ".compacted"))
-        assert not os.path.isdir(os.path.join(rd2, "seen_delta__old"))
-
-        # a .done round with NO delta (pre-delta layout / unrecoverable tear)
-        shutil.rmtree(os.path.join(rd1, "seen_delta"))
-        with pytest.raises(FileNotFoundError, match="seen_delta"):
-            fr.load_checkpoint(spark, ckpt, round_no=1)
 
         # reused ckpt_dir: a FRESH run (new run_id) must refuse to checkpoint
         # over another run's rounds...
@@ -235,13 +200,78 @@ def test_loader_raises_on_torn_or_alien_checkpoints(spark, world_dfs):
         state_b, _, _ = fr.expand_round(state_b, pages, robots)
         with pytest.raises(ValueError, match="another run"):
             fr.checkpoint(state_b, ckpt)
+
+        # the pointed-at seen table lost (catalog entry AND files): resuming
+        # would re-admit every URL ever seen
+        purge_table(spark, fr._seen_table_of(ckpt))
+        with pytest.raises(FileNotFoundError, match="neither a catalog entry"):
+            fr.load_checkpoint(spark, ckpt)
+
         # ...and a loader pointed at rounds from a different run refuses too
         with open(os.path.join(ckpt, "_RUN"), "w") as f:
             f.write("deadbeef0000")
         with pytest.raises(ValueError, match="different run"):
             fr.load_checkpoint(spark, ckpt)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
+
+
+def test_old_seen_delta_layout_raises(spark, world_dfs, tmp_path):
+    """A ckpt dir in the removed per-round layout (a .done round with a
+    seen_delta/ parquet dir and no _SEEN_TABLE pointer) must make the loader
+    and the compactor raise — never resume with an EMPTY seen set."""
+    pages, robots, blacklist = world_dfs
+    seeds = world.gen_seeds(spark, N_HOSTS)
+    empty = spark.createDataFrame([], schema.SEEN)
+    ckpt = str(tmp_path / "old_layout")
+    try:
+        accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
+        state, _, _ = fr.expand_round(fr.initial_state(accepted), pages, robots)
+        state = fr.checkpoint(state, ckpt)
+        rd = os.path.join(ckpt, "round_00001")
+        state.seen.write.parquet(os.path.join(rd, "seen_delta"))
+        os.remove(os.path.join(ckpt, "_SEEN_TABLE"))
+        assert fr.latest_round(ckpt) == 1
+        with pytest.raises(FileNotFoundError, match="_SEEN_TABLE"):
+            fr.load_checkpoint(spark, ckpt)
+        with pytest.raises(FileNotFoundError, match="_SEEN_TABLE"):
+            fr.compact_checkpoints(spark, ckpt)
+        assert os.path.isdir(rd)  # the compactor deleted nothing
+    finally:
+        purge_ckpt(spark, ckpt)
+
+
+def test_two_ckpt_dirs_own_distinct_tables(spark, world_dfs, oracle_world, tmp_path):
+    """Two crawls checkpointed in one session, interleaved round for round:
+    each ckpt dir derives its own seen table, and each resumes to its own
+    oracle seen set (a shared table would leak one crawl's URLs into the
+    other's anti-join)."""
+    from od_database_spark import crawl
+
+    pages, robots, blacklist = world_dfs
+    dirs = {N_HOSTS: str(tmp_path / "all_seeds"), N_HOSTS // 2: str(tmp_path / "half")}
+    try:
+        for n, ck in dirs.items():
+            r = crawl.run(
+                spark, world.gen_seeds(spark, n), pages, robots, blacklist,
+                ckpt_dir=ck, max_rounds=2, fetch=False,
+            )
+            assert r.rounds == 2
+        assert len({fr._seen_table_of(ck) for ck in dirs.values()}) == 2
+        seen = {}
+        for n, ck in dirs.items():
+            r = crawl.run(
+                spark, world.gen_seeds(spark, n), pages, robots, blacklist,
+                ckpt_dir=ck, resume=True, fetch=False,
+            )
+            assert r.state.frontier.count() == 0
+            seen[n] = {x["url"] for x in r.state.seen.collect()}
+            want = run_oracle(oracle_world, n).seen
+            assert seen[n] == want, (sorted(seen[n] - want)[:5], sorted(want - seen[n])[:5])
+        assert seen[N_HOSTS // 2] < seen[N_HOSTS]
+    finally:
+        for ck in dirs.values():
+            purge_ckpt(spark, ck)
 
 
 def test_multi_parent_image_fetched_once(spark):
@@ -358,8 +388,6 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_checkpoint_writes_lineage_and_metrics(spark, world_dfs):
-    import os
-
     ckpt = tempfile.mkdtemp(prefix="oddb_lineage_")
     try:
         pages, robots, blacklist = world_dfs
@@ -372,16 +400,16 @@ def test_checkpoint_writes_lineage_and_metrics(spark, world_dfs):
         rd = os.path.join(ckpt, f"round_{state.round_no:05d}")
         lineage = spark.read.parquet(os.path.join(rd, "lineage"))
         rows = lineage.collect()
-        assert {r["table"] for r in rows} == {"frontier", "seen_delta"}
-        # delta checkpointing: this is the FIRST checkpoint, so the delta
-        # (seeds + round-1 discoveries) IS the whole seen set
-        seen_total = sum(r["rows"] for r in rows if r["table"] == "seen_delta")
+        assert {r["table"] for r in rows} == {"frontier", "seen_append"}
+        # delta checkpointing: this is the FIRST checkpoint, so the appended
+        # rows (seeds + round-1 discoveries) ARE the whole seen set
+        seen_total = sum(r["rows"] for r in rows if r["table"] == "seen_append")
         assert seen_total == state.seen.count()
         assert all(r["token"].startswith((r["table"],)) for r in rows)
         metrics = spark.read.parquet(os.path.join(rd, "metrics")).collect()[0]
         assert metrics["urls_fetched"] == fetched.count()
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_bloom_crawl_equals_exact_crawl(spark, world_dfs):
@@ -427,10 +455,9 @@ def test_dense_seq_exact_numbering(spark):
 
 
 def test_checkpoint_writes_delta_not_full_copy(spark, world_dfs):
-    """Write-amplification contract: round k's checkpoint persists only the
-    urls discovered since the previous checkpoint, never the whole seen set."""
-    import os
-
+    """Write-amplification contract: round k's checkpoint appends to the
+    seen table only the urls discovered since the previous checkpoint,
+    never the whole seen set."""
     ckpt = tempfile.mkdtemp(prefix="oddb_delta_")
     try:
         pages, robots, blacklist = world_dfs
@@ -440,20 +467,21 @@ def test_checkpoint_writes_delta_not_full_copy(spark, world_dfs):
         state = fr.initial_state(accepted)
         state, _, _ = fr.expand_round(state, pages, robots)
         state = fr.checkpoint(state, ckpt)
-        seen_after_r1 = state.seen.count()
+        seen_r1 = {r["url"] for r in state.seen.collect()}
         state, _, _ = fr.expand_round(state, pages, robots)
         state = fr.checkpoint(state, ckpt)
-        seen_after_r2 = state.seen.count()
-        d1 = spark.read.parquet(os.path.join(ckpt, "round_00001", "seen_delta")).count()
-        d2 = spark.read.parquet(os.path.join(ckpt, "round_00002", "seen_delta")).count()
-        assert d1 == seen_after_r1                      # first delta = everything so far
-        assert d2 == seen_after_r2 - seen_after_r1      # second delta = ONLY the new urls
-        assert d2 < seen_after_r2                       # never a full copy
-        # and the loader reassembles the exact set from the deltas
+        seen_r2 = {r["url"] for r in state.seen.collect()}
+        tbl = spark.table(fr._seen_table_of(ckpt))
+        stamp = lambda k: {r["url"] for r in tbl.filter(F.col("round_no") == k).collect()}
+        assert stamp(1) == seen_r1                # first append = everything so far
+        assert stamp(2) == seen_r2 - seen_r1      # second append = ONLY the new urls
+        assert len(stamp(2)) < len(seen_r2)       # never a full copy
+        assert tbl.count() == len(seen_r2)        # no row written twice
+        # and the loader reads back the exact set
         loaded = fr.load_checkpoint(spark, ckpt)
-        assert loaded.seen.count() == seen_after_r2
+        assert loaded.seen.count() == len(seen_r2)
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_ftp_liveness_required(spark, world_dfs):
@@ -483,10 +511,9 @@ def test_ftp_liveness_required(spark, world_dfs):
 
 
 def test_compact_checkpoints(spark, world_dfs):
-    """Compaction folds all deltas into the latest round and drops older
-    dirs; the reloaded seen set is identical."""
-    import os
-
+    """Compaction folds the seen table's per-round appends into one
+    generation and drops older round dirs; the reloaded seen set is
+    identical."""
     ckpt = tempfile.mkdtemp(prefix="oddb_compact_")
     try:
         pages, robots, blacklist = world_dfs
@@ -505,11 +532,11 @@ def test_compact_checkpoints(spark, world_dfs):
         loaded = fr.load_checkpoint(spark, ckpt)
         after = {r["url"] for r in loaded.seen.collect()}
         assert after == before
-        # and the crawl can keep going from the compacted checkpoint
+        # and the crawl can keep going after compaction
         nxt, _, _ = fr.expand_round(loaded, pages, robots)
         assert nxt.round_no == surviving + 1
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_politeness_cutoff_shuffle_fallback_identical(spark):
@@ -577,3 +604,12 @@ def test_resolve_intra_batch_depths_param_parity(spark):
     assert base == [("http://h.ex/a/", 5), ("http://h.ex/a/b/", 1), ("http://h.ex/z/", 2)]
     assert key(fr.resolve_intra_batch(df, depths=[1, 2])) == base
     assert key(fr.resolve_intra_batch(df, depths=[1, 2, 3, 4])) == base
+
+
+def test_resolve_intra_batch_depths_missing_level_raises(spark):
+    """A caller-supplied depth domain that misses an occurring depth must
+    fail the call, not silently drop that level's rows."""
+    rows = [("http://h.ex/a/", 1, 1), ("http://h.ex/a/b/", 2, 2)]
+    df = spark.createDataFrame(rows, "canon_url string, submit_seq long, depth int")
+    with pytest.raises(Exception, match="not in depths"):
+        fr.resolve_intra_batch(df, depths=[1])

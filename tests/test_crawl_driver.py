@@ -1,11 +1,12 @@
 """Top-level crawl.run() driver: end-to-end with checkpointing and resume."""
 
-import shutil
 import tempfile
 
 from od_database_spark import crawl
 from od_database_spark.datagen import world
 from od_database_spark.operators import fetch as fetch_ops
+
+from .seen_tables import purge_ckpt
 
 
 def test_run_end_to_end_and_resume(spark):
@@ -37,4 +38,4 @@ def test_run_end_to_end_and_resume(spark):
             verified = fetch_ops.verify_images(r2.images)
             assert verified.filter(~verified.pixel_ok).count() == 0
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+        purge_ckpt(spark, ckpt)

@@ -8,7 +8,6 @@ localCheckpoint blocks."""
 
 import json
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,17 +21,9 @@ from od_database_spark.operators.dedup import ann_band_buckets
 from od_database_spark.operators.multimodal import embed_images
 from od_database_spark.streaming import index_maintenance as IM
 
+from .seen_tables import purge_ckpt, purge_table
+
 N_HOSTS = 12
-
-
-def _purge_table(spark, table):
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = urlparse(
-        spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/" + table
-    ).path
-    shutil.rmtree(loc, ignore_errors=True)
 
 
 @pytest.fixture(scope="module")
@@ -56,7 +47,7 @@ def test_crawl_images_stream_into_index_equals_full_rebuild(
     in_dir, ckpt = str(tmp_path / "vecs"), str(tmp_path / "ckpt")
     os.makedirs(in_dir)
     lsh_table = "crawl_stream_lsh_test"
-    _purge_table(spark, lsh_table)
+    purge_table(spark, lsh_table)
 
     round_vec_counts = []
     all_image_urls = []
@@ -94,7 +85,7 @@ def test_crawl_images_stream_into_index_equals_full_rebuild(
         want = sorted((r["vec_id"], r["bucket"]) for r in full.collect())
         assert got == want and len(got) > 0
     finally:
-        _purge_table(spark, lsh_table)
+        purge_table(spark, lsh_table)
 
 
 def test_long_crawl_bounded_block_store(spark, world_dfs, tmp_path):
@@ -113,24 +104,28 @@ def test_long_crawl_bounded_block_store(spark, world_dfs, tmp_path):
         spark, seeds, pages, robots, blacklist, round_seconds=6,
         max_rounds=25, fetch=False, use_bloom=False,
     )
-    ck = crawl.run(
-        spark, seeds, pages, robots, blacklist, round_seconds=6,
-        max_rounds=25, fetch=False, use_bloom=False,
-        ckpt_dir=str(tmp_path / "ck"),
-    )
-    assert ck.rounds == base.rounds and ck.rounds >= 8
-    assert ck.urls_fetched == base.urls_fetched
-    # identical outputs...
-    def urls(result):
-        out = []
-        for df in result.fetched_pages:
-            out.append(sorted(r["url"] for r in df.select("url").collect()))
-        return out
+    ck_dir = str(tmp_path / "ck")
+    try:
+        ck = crawl.run(
+            spark, seeds, pages, robots, blacklist, round_seconds=6,
+            max_rounds=25, fetch=False, use_bloom=False,
+            ckpt_dir=ck_dir,
+        )
+        assert ck.rounds == base.rounds and ck.rounds >= 8
+        assert ck.urls_fetched == base.urls_fetched
+        # identical outputs...
+        def urls(result):
+            out = []
+            for df in result.fetched_pages:
+                out.append(sorted(r["url"] for r in df.select("url").collect()))
+            return out
 
-    assert urls(ck) == urls(base)
-    # ...and every returned round frame reads from checkpoint-dir FILES
-    # (zero pinned blocks), where the in-memory form is RDD-block-backed
-    for df in ck.fetched_pages + ck.image_urls:
-        files = df.inputFiles()
-        assert files and all(str(tmp_path) in f for f in files)
-    assert all(not df.inputFiles() for df in base.fetched_pages)
+        assert urls(ck) == urls(base)
+        # ...and every returned round frame reads from checkpoint-dir FILES
+        # (zero pinned blocks), where the in-memory form is RDD-block-backed
+        for df in ck.fetched_pages + ck.image_urls:
+            files = df.inputFiles()
+            assert files and all(str(tmp_path) in f for f in files)
+        assert all(not df.inputFiles() for df in base.fetched_pages)
+    finally:
+        purge_ckpt(spark, ck_dir)

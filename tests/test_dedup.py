@@ -382,3 +382,15 @@ def test_ngram_jaccard_verifies_only_lsh_candidates(spark):
     verified = {(r["doc_a"], r["doc_b"])
                 for r in Q.q_ngram_jaccard(spark, sf).collect()}
     assert verified <= cand
+
+
+def test_connected_components_string_ids(spark):
+    """Node ids need not be longs: the carried previous label takes the
+    labels' own type, so string ids converge to the min id per component."""
+    edges = spark.createDataFrame(
+        [("b", "c"), ("a", "b"), ("y", "x"), ("d", "c")], "doc_a string, doc_b string"
+    )
+    labels, _ = D.connected_components(edges)
+    assert labels.schema["comp"].dataType.simpleString() == "string"
+    got = {r["doc_id"]: r["comp"] for r in labels.collect()}
+    assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "x": "x", "y": "x"}

@@ -1,9 +1,10 @@
-"""Seen-table crawl mode: the bucketed catalog table as the durable seen
-ground truth (VERDICT r4 top item — the zero-seen-side-shuffle layout wired
-into the crawl loop).  Contract: bit-identical crawl order + seen set vs the
-default delta-parquet mode, resume-exactness (torn rounds excluded by the
-round_no bound), and cross-session table recovery."""
+"""The bucketed seen table: a checkpointed crawl's single durable seen set
+(the zero-seen-side-shuffle layout).  Contract: bit-identical crawl order +
+seen set vs an uncheckpointed crawl, resume-exactness (torn rounds excluded
+by the round_no bound), cross-session table recovery, generation
+compaction, and one table per ckpt dir."""
 
+import os
 import shutil
 import tempfile
 
@@ -15,21 +16,17 @@ from od_database_spark.datagen import world
 from od_database_spark.operators import frontier as fr
 from od_database_spark.operators import seen_store as SS
 
+from .seen_tables import purge_ckpt, purge_table
+
 N_HOSTS = 20
 MAX_ROUNDS = 10
 TABLE = "seen_crawl_mode_test"
 
 
-def _purge_table(spark, table):
-    from urllib.parse import urlparse
-
-    # compaction rolls the name through generations — purge those too
-    for name in [table] + [f"{table}__g{g}" for g in range(1, 6)]:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        loc = urlparse(
-            spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/" + name
-        ).path
-        shutil.rmtree(loc, ignore_errors=True)
+def _reads_table(df, table):
+    """True iff every file ``df`` scans lives under ``table``'s location."""
+    files = df.inputFiles()
+    return bool(files) and all(f"/{table}/" in f for f in files)
 
 
 @pytest.fixture(scope="module")
@@ -41,15 +38,13 @@ def world_dfs(spark):
     return pages, robots, blacklist
 
 
-def _run(spark, world_dfs, seen_table=None, ckpt_dir=None, resume_at=None,
-         use_bloom=False):
+def _run(spark, world_dfs, ckpt_dir=None, resume_at=None, use_bloom=False):
     pages, robots, blacklist = world_dfs
     seeds = world.gen_seeds(spark, N_HOSTS)
     empty = spark.createDataFrame([], schema.SEEN)
     accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
     state = fr.initial_state(
-        accepted, use_bloom=use_bloom, expected_total_urls=10_000,
-        seen_table=seen_table,
+        accepted, use_bloom=use_bloom, expected_total_urls=10_000
     )
     fetched_all = []
     for _ in range(MAX_ROUNDS):
@@ -73,48 +68,49 @@ def _order(fetched_all):
 
 
 def test_table_mode_crawl_identical_to_default(spark, world_dfs):
-    """Same world, both seen layouts: crawl order and final seen set must be
-    bit-identical (the storage layout is an optimization, never semantics)."""
-    _purge_table(spark, TABLE)
+    """Same world, checkpointed (seen table) vs uncheckpointed (in-memory
+    union): crawl order and final seen set must be bit-identical (the
+    storage layout is an optimization, never semantics)."""
+    ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tblid_")
     try:
-        state_d, fetched_d = _run(spark, world_dfs, seen_table=None)
-        state_t, fetched_t = _run(spark, world_dfs, seen_table=TABLE)
+        state_d, fetched_d = _run(spark, world_dfs)
+        state_t, fetched_t = _run(spark, world_dfs, ckpt_dir=ckpt)
         seen_d = {r["url"] for r in state_d.seen.collect()}
         seen_t = {r["url"] for r in state_t.seen.collect()}
         assert seen_t == seen_d
         assert _order(fetched_t) == _order(fetched_d)
         assert state_t.frontier.count() == 0
         # the table carries per-round stamps covering every committed round
-        tbl = spark.table(TABLE)
+        table = fr._seen_table_of(ckpt)
+        assert table == fr._derived_seen_table(ckpt)
+        assert _reads_table(state_t.seen, table)
+        tbl = spark.table(table)
         assert tbl.columns == ["url", "url_hash", "round_no"]
         assert tbl.count() == len(seen_d)  # no duplicate appends on a clean run
         assert tbl.agg(F.max("round_no")).collect()[0][0] <= state_t.round_no
     finally:
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_bloom_crawl_identical(spark, world_dfs):
     """Bloom prefilter + table ground truth compose: identical results."""
-    _purge_table(spark, TABLE)
+    ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tblbloom_")
     try:
-        state_d, fetched_d = _run(spark, world_dfs, seen_table=None)
-        state_t, fetched_t = _run(spark, world_dfs, seen_table=TABLE, use_bloom=True)
+        state_d, fetched_d = _run(spark, world_dfs)
+        state_t, fetched_t = _run(spark, world_dfs, ckpt_dir=ckpt, use_bloom=True)
         assert {r["url"] for r in state_t.seen.collect()} == {
             r["url"] for r in state_d.seen.collect()
         }
         assert _order(fetched_t) == _order(fetched_d)
     finally:
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_resume_identical_and_excludes_torn_round(spark, world_dfs):
-    _purge_table(spark, TABLE)
     ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tbl_")
     try:
-        state_b, fetched_b = _run(spark, world_dfs, seen_table=None)
-        state_r, fetched_r = _run(
-            spark, world_dfs, seen_table=TABLE, ckpt_dir=ckpt, resume_at=2
-        )
+        state_b, fetched_b = _run(spark, world_dfs)
+        state_r, fetched_r = _run(spark, world_dfs, ckpt_dir=ckpt, resume_at=2)
         assert {r["url"] for r in state_r.seen.collect()} == {
             r["url"] for r in state_b.seen.collect()
         }
@@ -122,19 +118,19 @@ def test_table_mode_resume_identical_and_excludes_torn_round(spark, world_dfs):
 
         # torn-round simulation: rows appended by a round that never reached
         # its .done marker must be invisible to a resume (round_no bound)
+        table = fr._seen_table_of(ckpt)
         last = fr.latest_round(ckpt)
         torn = spark.createDataFrame(
             [("http://torn.example/x/", 12345)], "url string, url_hash long"
         )
-        SS.append_seen(torn, TABLE, round_no=last + 1)
+        SS.append_seen(torn, table, round_no=last + 1)
         loaded = fr.load_checkpoint(spark, ckpt)
-        assert loaded.seen_table == TABLE
+        assert _reads_table(loaded.seen, table)
         urls = {r["url"] for r in loaded.seen.collect()}
         assert "http://torn.example/x/" not in urls
         assert urls == {r["url"] for r in state_b.seen.collect()}
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_cross_session_recovery(spark, world_dfs):
@@ -143,63 +139,60 @@ def test_table_mode_cross_session_recovery(spark, world_dfs):
     intact) and resume with the full seen set."""
     from urllib.parse import urlparse
 
-    _purge_table(spark, TABLE)
     ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tblrec_")
     stash = tempfile.mkdtemp(prefix="oddb_stash_") + "/t"
     try:
-        state, fetched = _run(spark, world_dfs, seen_table=TABLE, ckpt_dir=ckpt)
+        state, fetched = _run(spark, world_dfs, ckpt_dir=ckpt)
         want = {r["url"] for r in state.seen.collect()}
+        table = fr._seen_table_of(ckpt)
 
         loc = urlparse(
-            spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/" + TABLE
+            spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/" + table
         ).path
         shutil.copytree(loc, stash)
-        spark.sql(f"DROP TABLE {TABLE}")  # managed drop deletes files too
+        spark.sql(f"DROP TABLE {table}")  # managed drop deletes files too
         shutil.copytree(stash, loc)
-        assert not spark.catalog.tableExists(TABLE)
+        assert not spark.catalog.tableExists(table)
 
         loaded = fr.load_checkpoint(spark, ckpt)
-        assert spark.catalog.tableExists(TABLE)
+        assert spark.catalog.tableExists(table)
         assert {r["url"] for r in loaded.seen.collect()} == want
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _purge_table(spark, TABLE)
+        shutil.rmtree(os.path.dirname(stash), ignore_errors=True)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_compaction_trims_rounds_and_files(spark, world_dfs):
-    """Table-mode compaction: superseded round dirs deleted AND the
-    per-round append file sets fold into a fresh single-generation table
-    (the pointer flips atomically; old generation dropped); resume
-    reconstructs the identical seen set from the new generation."""
-    import os
-
-    _purge_table(spark, TABLE)
+    """Compaction: superseded round dirs deleted AND the per-round append
+    file sets fold into a fresh single-generation table (the pointer flips
+    atomically; old generation dropped); resume reconstructs the identical
+    seen set from the new generation."""
     ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tblcmp_")
     try:
-        state, fetched = _run(spark, world_dfs, seen_table=TABLE, ckpt_dir=ckpt)
+        state, fetched = _run(spark, world_dfs, ckpt_dir=ckpt)
         want = {r["url"] for r in state.seen.collect()}
-        files_before = SS.data_file_count(spark, TABLE)
+        table = fr._seen_table_of(ckpt)
+        files_before = SS.data_file_count(spark, table)
         assert state.round_no >= 3  # several appends happened
         latest = fr.compact_checkpoints(spark, ckpt)
         rounds = [d for d in os.listdir(ckpt) if d.startswith("round_")]
         assert rounds == [f"round_{latest:05d}"]
         new_table = fr._seen_table_of(ckpt)
-        assert new_table == f"{TABLE}__g1"
-        assert not spark.catalog.tableExists(TABLE)  # old generation dropped
+        assert new_table == f"{table}__g1"
+        assert not spark.catalog.tableExists(table)  # old generation dropped
         # one file set per bucket instead of one per (bucket, round)
         assert SS.data_file_count(spark, new_table) < files_before
         loaded = fr.load_checkpoint(spark, ckpt)
-        assert loaded.seen_table == new_table
+        assert _reads_table(loaded.seen, new_table)
         assert {r["url"] for r in loaded.seen.collect()} == want
         # a second compaction rolls the generation again, idempotently
         fr.compact_seen_table(spark, ckpt)
-        assert fr._seen_table_of(ckpt) == f"{TABLE}__g2"
+        assert fr._seen_table_of(ckpt) == f"{table}__g2"
         assert {
             r["url"] for r in fr.load_checkpoint(spark, ckpt).seen.collect()
         } == want
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_crash_before_pointer_flip_keeps_old_generation(
@@ -208,26 +201,25 @@ def test_table_mode_crash_before_pointer_flip_keeps_old_generation(
     """Torn compaction: the new generation fully written but the pointer
     not flipped — the loader keeps serving the OLD table; the next
     compaction overwrites the orphan and completes."""
-    _purge_table(spark, TABLE)
     ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_tbltorn_")
     try:
-        state, _ = _run(spark, world_dfs, seen_table=TABLE, ckpt_dir=ckpt)
+        state, _ = _run(spark, world_dfs, ckpt_dir=ckpt)
         want = {r["url"] for r in state.seen.collect()}
+        table = fr._seen_table_of(ckpt)
         latest = fr.latest_round(ckpt)
         # simulate the crash window: generation written, pointer untouched
-        SS.compact_into_generation(spark, TABLE, f"{TABLE}__g1", latest)
-        assert fr._seen_table_of(ckpt) == TABLE
+        SS.compact_into_generation(spark, table, f"{table}__g1", latest)
+        assert fr._seen_table_of(ckpt) == table
         loaded = fr.load_checkpoint(spark, ckpt)
-        assert loaded.seen_table == TABLE
+        assert _reads_table(loaded.seen, table)
         assert {r["url"] for r in loaded.seen.collect()} == want
         # retry completes over the orphan
-        assert fr.compact_seen_table(spark, ckpt) == f"{TABLE}__g1"
+        assert fr.compact_seen_table(spark, ckpt) == f"{table}__g1"
         assert {
             r["url"] for r in fr.load_checkpoint(spark, ckpt).seen.collect()
         } == want
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
 
 
 def test_table_mode_seen_side_never_shuffles(spark, world_dfs):
@@ -239,7 +231,7 @@ def test_table_mode_seen_side_never_shuffles(spark, world_dfs):
 
     from od_database_spark.plans import explain as PL
 
-    _purge_table(spark, TABLE)
+    purge_table(spark, TABLE)
     try:
         seen = spark.range(3000).select(
             F.format_string("http://h%d.t/d%d/", F.pmod("id", F.lit(31)), F.col("id")).alias("url")
@@ -272,35 +264,36 @@ def test_table_mode_seen_side_never_shuffles(spark, world_dfs):
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     finally:
-        _purge_table(spark, TABLE)
+        purge_table(spark, TABLE)
 
 
 def test_crawl_run_table_mode_with_compaction(spark, world_dfs, tmp_path):
-    """crawl.run end-to-end in table mode with in-crawl compaction
-    (compact_every): identical fetched set vs the default mode, and the
-    final state points at a rolled generation."""
+    """crawl.run end-to-end with a ckpt dir and in-crawl compaction
+    (compact_every): identical fetched set vs the uncheckpointed run, and
+    the final state reads a rolled generation of the dir's seen table."""
     from od_database_spark import crawl
 
     pages, robots, blacklist = world_dfs
     seeds = world.gen_seeds(spark, N_HOSTS)
-    _purge_table(spark, TABLE)
+    ck = str(tmp_path / "ck")
     try:
         base = crawl.run(
             spark, seeds, pages, robots, blacklist, fetch=False, use_bloom=False,
         )
         tbl = crawl.run(
             spark, seeds, pages, robots, blacklist, fetch=False, use_bloom=False,
-            seen_table=TABLE, ckpt_dir=str(tmp_path / "ck"), compact_every=2,
+            ckpt_dir=ck, compact_every=2,
         )
         assert tbl.rounds == base.rounds
         assert tbl.urls_fetched == base.urls_fetched
-        assert tbl.state.seen_table and tbl.state.seen_table.startswith(TABLE)
-        assert "__g" in tbl.state.seen_table  # compaction rolled at least once
+        table = fr._seen_table_of(ck)
+        assert table.startswith(fr._derived_seen_table(ck) + "__g")  # rolled
+        assert _reads_table(tbl.state.seen, table)
         seen_b = {r["url"] for r in base.state.seen.collect()}
         seen_t = {r["url"] for r in tbl.state.seen.collect()}
         assert seen_t == seen_b
     finally:
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ck)
 
 
 def test_table_mode_compaction_floor_rejects_older_round_load(spark, world_dfs):
@@ -310,12 +303,9 @@ def test_table_mode_compaction_floor_rejects_older_round_load(spark, world_dfs):
     silently reconstruct an EMPTY seen set.  The _SEEN_FLOOR pointer now
     makes that load RAISE instead (raise-not-readmit invariant, table-mode
     form); loads at/after the floor still work."""
-    import os
-
-    _purge_table(spark, TABLE)
     ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_floor_")
     try:
-        state, _fetched = _run(spark, world_dfs, seen_table=TABLE, ckpt_dir=ckpt)
+        state, _fetched = _run(spark, world_dfs, ckpt_dir=ckpt)
         assert state.round_no >= 2
         want = {r["url"] for r in state.seen.collect()}
         older = state.round_no - 1
@@ -329,5 +319,4 @@ def test_table_mode_compaction_floor_rejects_older_round_load(spark, world_dfs):
         loaded = fr.load_checkpoint(spark, ckpt, round_no=latest)
         assert {r["url"] for r in loaded.seen.collect()} == want
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        _purge_table(spark, TABLE)
+        purge_ckpt(spark, ckpt)
