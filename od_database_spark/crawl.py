@@ -6,11 +6,15 @@ views.py/tasks.py) as one resumable batch pipeline.
     result = crawl.run(spark, seeds_df, pages, robots, blacklist,
                        ckpt_dir="/data/ckpt")
 
-Each round is checkpointed before the next begins: the frontier as parquet,
-the round's new URLs appended to the ckpt dir's bucketed seen table
-(operators/seen_store.py, the single durable seen set), lineage manifests
-and metrics.  A killed run resumes exactly where it stopped
-(``resume=True``).
+Each round is checkpointed before the next begins, into ``round_<n>/``
+under the ckpt dir: ``frontier/`` (parquet), ``lineage/`` (per-partition
+lineage manifests) and ``.done``, the round's JSON commit record (round,
+run id, frontier and seen-delta row counts, and the round's fetched and
+image counts and seconds).  The round's new URLs are appended to the ckpt
+dir's bucketed seen table (operators/seen_store.py, the single durable
+seen set) before the record is written, and the round's outputs go to
+``outputs/round_<n>/{fetched,images}/``.  A killed run resumes exactly
+where it stopped (``resume=True``).
 """
 
 from __future__ import annotations
@@ -19,11 +23,22 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from . import schema
 from .operators import fetch as fetch_ops
 from .operators import frontier as fr
+
+
+def _spill(df: DataFrame, path: str) -> tuple[DataFrame, int]:
+    """Write one round output as parquet; return the parquet-backed frame
+    and the row count observed on that write.  One job: no ``count()``, and
+    the read-back takes the known schema instead of inferring it."""
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    df.unpersist()
+    return df.sparkSession.read.schema(df.schema).parquet(path), int(rows.get["n"])
 
 
 @dataclass
@@ -83,30 +98,28 @@ def run(
     image_urls: list[DataFrame] = []
     rounds = 0
     while rounds < max_rounds:
-        if state.frontier.count() == 0:
+        # a loaded state carries its frontier count from the commit record
+        n_frontier = state.frontier_rows
+        if n_frontier is None:
+            n_frontier = state.frontier.count()
+        if n_frontier == 0:
             break
         t0 = time.time()
         state, fetched, images = fr.expand_round(state, pages, robots, round_seconds)
-        n_fetched = fetched.count()
-        n_images = images.count()
-        urls_fetched += n_fetched
-        if ckpt_dir is not None:
+        if ckpt_dir is None:
+            n_fetched, n_images = fetched.count(), images.count()
+        else:
             # spill the round's outputs to the checkpoint dir and hand the
             # caller parquet-backed frames instead of pinning every round's
             # localCheckpoint blocks for the whole crawl — on a 100-round
             # crawl the block store otherwise grows linearly with rounds
             # (round-4 verdict item).  Resume state is untouched: these are
             # OUTPUTS, committed per round alongside (not inside) the
-            # .done-guarded state dirs.
-            spark_s = fetched.sparkSession
+            # record-guarded state dirs.
             odir = os.path.join(ckpt_dir, "outputs", f"round_{state.round_no:05d}")
-            fetched.write.mode("overwrite").parquet(os.path.join(odir, "fetched"))
-            images.write.mode("overwrite").parquet(os.path.join(odir, "images"))
-            fetched_disk = spark_s.read.parquet(os.path.join(odir, "fetched"))
-            images_disk = spark_s.read.parquet(os.path.join(odir, "images"))
-            fetched.unpersist()
-            images.unpersist()
-            fetched, images = fetched_disk, images_disk
+            fetched, n_fetched = _spill(fetched, os.path.join(odir, "fetched"))
+            images, n_images = _spill(images, os.path.join(odir, "images"))
+        urls_fetched += n_fetched
         fetched_pages.append(fetched)
         image_urls.append(images)
         rounds += 1

@@ -26,13 +26,14 @@ Scale notes (10^10 frontier):
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import re
 import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schema
@@ -259,11 +260,14 @@ class CrawlState:
     # O(all-urls-ever) — the difference between linear and quadratic total
     # checkpoint I/O at 10^10)
     seen_delta: "DataFrame | None" = None
-    # operational run identity: stamped into every round's meta and the
-    # ckpt_dir's _RUN file so a loader can detect (and refuse) round dirs
-    # left behind by a DIFFERENT run in a reused ckpt_dir — silently
+    # operational run identity: stamped into every round's commit record
+    # and the ckpt_dir's _RUN file so a loader can detect (and refuse) round
+    # dirs left behind by a DIFFERENT run in a reused ckpt_dir — silently
     # resuming a stale run's rounds re-crawls or wrongly skips URLs
     run_id: str | None = None
+    # frontier row count when already known (a loaded state takes it from
+    # its commit record), so the crawl loop's drain test costs no job
+    frontier_rows: int | None = None
 
 
 def initial_state(
@@ -648,46 +652,71 @@ def dedup_image_urls(image_urls: DataFrame) -> DataFrame:
 # --- checkpoint / resume ---------------------------------------------------
 
 
-def _lineage_manifest(df: DataFrame, round_no: int, table: str) -> DataFrame:
+def _lineage_manifest(tables: dict[str, DataFrame], round_no: int) -> DataFrame:
     """Per-partition lineage rows (SURVEY.md S12 analog): one row per
-    (round, partition) with a deterministic token — replaces the reference's
-    uuid upload slots (tasks.py:167-176; X9: no uuid, replayable)."""
+    (round, table, partition) with a deterministic token — replaces the
+    reference's uuid upload slots (tasks.py:167-176; X9: no uuid,
+    replayable).  Every table's rows are tagged with their own partition id
+    and summarised by ONE aggregation (one map stage for all tables).  A
+    mapInArrow summary would save the map stage's job, but its Python
+    workers cost ~4x the CPU of this native shuffle at crawl-round sizes."""
+    tagged = None
+    for name, df in tables.items():
+        part = df.select(
+            F.spark_partition_id().alias("partition_id"),
+            F.lit(name).alias("table"),
+            F.crc32(F.col("url").cast("binary")).alias("_ck"),
+        )
+        tagged = part if tagged is None else tagged.unionByName(part)
     return (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"), F.sum(F.crc32(F.col("url").cast("binary"))).alias("_ck"))
+        tagged.groupBy("table", "partition_id")
+        .agg(F.count("*").alias("rows"), F.sum("_ck").alias("_ck"))
         .select(
             F.lit(round_no).alias("round"),
             F.col("partition_id"),
-            F.lit(table).alias("table"),
+            F.col("table"),
             F.col("rows"),
             F.format_string(
-                "%s_%d_%08x", F.lit(table), F.col("partition_id"),
+                "%s_%d_%08x", F.col("table"), F.col("partition_id"),
                 F.pmod(F.coalesce(F.col("_ck"), F.lit(0)), F.lit(4294967296)),
             ).alias("token"),
         )
     )
 
 
+# keys every round's commit record (its `.done` file) must hold
+_RECORD_KEYS = ("round_no", "next_seq", "run_id", "frontier_rows", "seen_delta_rows", "metrics")
+
+
 def checkpoint(state: CrawlState, ckpt_dir: str, metrics: dict | None = None) -> CrawlState:
-    """Persist one round's state; the `.done` marker commits it atomically
-    (everything is written before the marker exists).  The task-tracker
-    lease/reassign loop (tasks.py:93-112, max_assign_time) collapses into
-    this: an interrupted round simply re-runs from the last marker.
+    """Persist one round's state under ``round_<n>/``; its `.done` commit
+    record commits it atomically (everything is written before the record
+    exists).  The task-tracker lease/reassign loop (tasks.py:93-112,
+    max_assign_time) collapses into this: an interrupted round simply
+    re-runs from the last committed record.
+
+    Round dir layout:
+
+    - ``frontier/``: the frontier, parquet;
+    - ``lineage/``: per-partition lineage manifests (which partitions of
+      the frontier and of the seen append contributed how many rows, with
+      content-derived tokens) — the north rule's lineage contract;
+    - ``.done``: the commit record, a small JSON file written by the driver
+      (tmp + ``os.replace``) holding ``round_no``, ``next_seq``, ``run_id``,
+      ``frontier_rows``, ``seen_delta_rows`` and the caller's ``metrics``
+      (``crawl.run`` passes the round's fetched and image counts).  The
+      row counts are observed on the lineage write, so they cost no job.
 
     The durable seen set is ONE bucketed catalog table per ckpt dir
     (operators/seen_store.py), named by the dir's ``_SEEN_TABLE`` pointer.
     Each checkpoint appends only ``state.seen_delta`` (the rows not yet
     durable), stamped with the round number: per-round I/O is O(delta),
-    never a full copy.  The append lands BEFORE the `.done` marker, so a
+    never a full copy.  The append lands BEFORE the commit record, so a
     crash in between leaves rows a resume's ``round_no <=`` bound excludes
     (the re-run re-appends; duplicate rows are harmless to the left_anti).
     The first checkpoint into a dir derives the table name from the dir,
     overwrites whatever a dead run left at that name, then writes the
     pointer.
-
-    Alongside the state, writes per-partition lineage manifests (which
-    partitions contributed how many rows, with content-derived tokens) and an
-    optional metrics row — the north rule's lineage + metrics contract.
     """
     from . import seen_store
 
@@ -711,21 +740,21 @@ def checkpoint(state: CrawlState, ckpt_dir: str, metrics: dict | None = None) ->
         _write_pointer(ckpt_dir, "_SEEN_TABLE", table)
     else:
         seen_store.append_seen(delta, table, round_no=state.round_no)
-    lineage = _lineage_manifest(state.frontier, state.round_no, "frontier").unionByName(
-        _lineage_manifest(delta, state.round_no, "seen_append")
-    )
-    lineage.write.mode("overwrite").parquet(os.path.join(rd, "lineage"))
-    spark.createDataFrame(
-        [(state.round_no, state.next_seq, run_id)],
-        "round_no int, next_seq long, run_id string",
-    ).write.mode("overwrite").parquet(os.path.join(rd, "meta"))
-    if metrics is not None:
-        spark.createDataFrame(
-            [tuple([state.round_no] + [float(metrics.get(k, 0.0)) for k in sorted(metrics)])],
-            ", ".join(["round_no int"] + [f"`{k}` double" for k in sorted(metrics)]),
-        ).write.mode("overwrite").parquet(os.path.join(rd, "metrics"))
-    with open(os.path.join(rd, ".done"), "w") as f:
-        f.write("ok")
+    tables = {"frontier": state.frontier, "seen_append": delta}
+    counts = Observation()
+    _lineage_manifest(tables, state.round_no).observe(counts, *[
+        F.coalesce(F.sum(F.when(F.col("table") == t, F.col("rows"))), F.lit(0)).alias(t)
+        for t in tables
+    ]).write.mode("overwrite").parquet(os.path.join(rd, "lineage"))
+    record = {
+        "round_no": state.round_no,
+        "next_seq": state.next_seq,
+        "run_id": run_id,
+        "frontier_rows": int(counts.get["frontier"]),
+        "seen_delta_rows": int(counts.get["seen_append"]),
+        "metrics": {k: float(v) for k, v in (metrics or {}).items()},
+    }
+    _write_pointer(rd, ".done", json.dumps(record, sort_keys=True))  # the commit point
     # reload from disk so downstream plans read the bucketed table and the
     # frontier files instead of dragging the whole lineage DAG across rounds
     return load_checkpoint(spark, ckpt_dir, state.round_no)
@@ -818,6 +847,7 @@ def compact_seen_table(spark: SparkSession, ckpt_dir: str) -> str:
     latest = latest_round(ckpt_dir)
     if latest is None:
         raise FileNotFoundError(f"no completed round under {ckpt_dir}")
+    _read_record(ckpt_dir, latest)  # an unreadable layout raises before any rewrite
     m = re.match(r"^(.*?)(?:__g(\d+))?$", table)
     base, gen = m.group(1), int(m.group(2) or 0)
     new_table = f"{base}__g{gen + 1}"
@@ -852,15 +882,43 @@ def compact_checkpoints(spark: SparkSession, ckpt_dir: str) -> int:
     return latest
 
 
-def latest_round(ckpt_dir: str) -> int | None:
+def _committed_rounds(ckpt_dir: str) -> list[int]:
+    """Round numbers whose commit record exists, ascending.  A leftover
+    ``.done.tmp`` (a crash inside the record write) commits nothing."""
     if not os.path.isdir(ckpt_dir):
-        return None
-    rounds = [
+        return []
+    return sorted(
         int(d.split("_")[1])
         for d in os.listdir(ckpt_dir)
         if d.startswith("round_") and os.path.exists(os.path.join(ckpt_dir, d, ".done"))
-    ]
-    return max(rounds) if rounds else None
+    )
+
+
+def _read_record(ckpt_dir: str, round_no: int) -> dict:
+    """A committed round's commit record.  A `.done` that is not one (the
+    older layout's bare marker beside ``meta/`` parquet) raises: the round's
+    identity and counts are unknown, and resuming it blind could mix runs."""
+    path = os.path.join(ckpt_dir, f"round_{round_no:05d}", ".done")
+    try:
+        with open(path) as f:
+            record = json.load(f)
+    except (OSError, ValueError):
+        record = None
+    if (
+        not isinstance(record, dict)
+        or any(k not in record for k in _RECORD_KEYS)
+        or record["round_no"] != round_no
+    ):
+        raise FileNotFoundError(
+            f"{path} is not a round commit record (an older checkpoint "
+            "layout's marker?). Re-crawl into a clean ckpt_dir."
+        )
+    return record
+
+
+def latest_round(ckpt_dir: str) -> int | None:
+    rounds = _committed_rounds(ckpt_dir)
+    return rounds[-1] if rounds else None
 
 
 def load_checkpoint(
@@ -871,18 +929,23 @@ def load_checkpoint(
     expected_total_urls: int = 1_000_000,
     bloom_parts: int = 64,
 ) -> CrawlState:
-    """Resume state at ``round_no`` (default: the latest `.done` round).
-    The seen set is the ckpt dir's seen table bounded at that round — rows
-    a torn round appended past the bound are excluded (file-level prune:
-    round_no is constant per appended file)."""
+    """Resume state at ``round_no`` (default: the latest committed round).
+    Reads one commit record per committed round up to it (driver-side JSON,
+    no Spark job) and refuses rounds of another run.  The seen set is the
+    ckpt dir's seen table bounded at that round — rows a torn round
+    appended past the bound are excluded (file-level prune: round_no is
+    constant per appended file)."""
     from . import seen_store
 
+    committed = _committed_rounds(ckpt_dir)
     if round_no is None:
-        round_no = latest_round(ckpt_dir)
-        if round_no is None:
+        if not committed:
             raise FileNotFoundError(f"no completed round under {ckpt_dir}")
-    rd = os.path.join(ckpt_dir, f"round_{round_no:05d}")
-    meta = spark.read.parquet(os.path.join(rd, "meta")).collect()[0]
+        round_no = committed[-1]
+    elif round_no not in committed:
+        raise FileNotFoundError(f"round {round_no} under {ckpt_dir} is not committed")
+    records = [_read_record(ckpt_dir, r) for r in committed if r <= round_no]
+    record = records[-1]
     run_id = _read_pointer(ckpt_dir, "_RUN")
     if run_id is None:
         raise FileNotFoundError(
@@ -890,19 +953,9 @@ def load_checkpoint(
             "re-checkpoint with this version before resuming."
         )
     table = _seen_table_of(ckpt_dir)
-    # every .done round up to the loaded one must belong to THIS run (stale
-    # rounds from a prior run in a reused dir)
-    done_rounds = sorted(
-        int(d.split("_")[1])
-        for d in os.listdir(ckpt_dir)
-        if d.startswith("round_")
-        and int(d.split("_")[1]) <= round_no
-        and os.path.exists(os.path.join(ckpt_dir, d, ".done"))
-    )
-    metas = spark.read.parquet(
-        *[os.path.join(ckpt_dir, f"round_{r:05d}", "meta") for r in done_rounds]
-    ).collect()
-    alien = sorted({m["round_no"] for m in metas if m["run_id"] != run_id})
+    # every committed round up to the loaded one must belong to THIS run
+    # (stale rounds from a prior run in a reused dir)
+    alien = sorted(r["round_no"] for r in records if r["run_id"] != run_id)
     if alien:
         raise ValueError(
             f"rounds {alien} under {ckpt_dir} belong to a different run than "
@@ -923,13 +976,15 @@ def load_checkpoint(
             "catalog entry nor surviving files exist — resuming would "
             "re-admit every URL ever seen."
         )
+    rd = os.path.join(ckpt_dir, f"round_{round_no:05d}")
     state = CrawlState(
-        round_no=meta["round_no"],
+        round_no=record["round_no"],
         frontier=spark.read.schema(schema.FRONTIER).parquet(os.path.join(rd, "frontier")),
         seen=seen_store.seen_view(spark, table, round_no),
-        next_seq=meta["next_seq"],
+        next_seq=record["next_seq"],
         seen_delta=None,  # everything durable now; next delta starts empty
         run_id=run_id,
+        frontier_rows=record["frontier_rows"],
     )
     if use_bloom:
         # the bloom is derived state — rebuild from the durable seen table

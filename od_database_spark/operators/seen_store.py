@@ -8,14 +8,16 @@ With subset co-partitioning enabled (session.py sets
 anti-join on (url_hash, url) accepts the table's HashPartitioning(url_hash)
 — the 10^10-row seen side is NEVER shuffled; only the (much smaller)
 candidate batch exchanges, hashed to the bucket layout.  Appends preserve
-the bucket spec, so incremental growth keeps the property.
+the bucket spec, so incremental growth keeps the property, and every write
+hash-aligns its rows to the buckets first, so it adds at most one file per
+bucket.
 
 Rows carry a ``round_no`` column so the table can serve as the crawl
 loop's DURABLE ground truth: frontier.checkpoint() is its only writer in
 the crawl, appending each round's new urls stamped with the round before
-the round's ``.done`` marker, and a resume reads ``round_no <= last
+the round's ``.done`` commit record, and a resume reads ``round_no <= last
 committed round`` — rows appended by a round that crashed before its
-``.done`` marker are excluded by the filter (and the re-run's re-append only
+``.done`` record are excluded by the filter (and the re-run's re-append only
 duplicates rows, which a left_anti join ignores).  Every append writes
 files whose round_no is constant, so the parquet min/max footer makes the
 resume filter a file-level prune, not a scan.  Correctness never depends
@@ -31,10 +33,19 @@ from pyspark.sql import functions as F
 N_BUCKETS = 64
 
 
-def _stamped(seen: DataFrame, round_no: int) -> DataFrame:
+def _bucket_aligned(seen: DataFrame, round_no: int, n_buckets: int) -> DataFrame:
+    """(url, url_hash, round_no) rows hash-partitioned on url_hash into a
+    partition count that divides ``n_buckets``.  A bucket id is the same
+    murmur3 ``pmod`` that hash partitioning computes, so with P | n_buckets
+    every bucket's rows sit in one task: a write adds one file per
+    non-empty bucket, not one per (bucket, input partition).  P is the
+    largest such divisor within ``spark.sql.shuffle.partitions``, so a
+    small delta is not split into n_buckets near-empty tasks."""
+    cap = max(int(seen.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")), 1)
+    parts = max(d for d in range(1, min(cap, n_buckets) + 1) if n_buckets % d == 0)
     return seen.select(
         "url", "url_hash", F.lit(int(round_no)).cast("int").alias("round_no")
-    )
+    ).repartition(parts, "url_hash")
 
 
 def create_seen_table(
@@ -43,7 +54,7 @@ def create_seen_table(
     """Initial build: (url, url_hash, round_no) rows into a bucketed,
     bucket-sorted catalog table."""
     (
-        _stamped(seen, round_no)
+        _bucket_aligned(seen, round_no, n_buckets)
         .write.mode("overwrite")
         .bucketBy(n_buckets, "url_hash")
         .sortBy("url_hash")
@@ -56,9 +67,11 @@ def append_seen(
     delta: DataFrame, table: str, n_buckets: int = N_BUCKETS, round_no: int = 0
 ) -> None:
     """Incremental growth: append a round's new urls; the bucket spec must
-    match the table's, so each append adds one file set per bucket."""
+    match the table's.  The rows are hash-aligned to the buckets first, so
+    an append adds at most ``n_buckets`` files whatever the delta's
+    partitioning."""
     (
-        _stamped(delta, round_no)
+        _bucket_aligned(delta, round_no, n_buckets)
         .write.mode("append")
         .bucketBy(n_buckets, "url_hash")
         .sortBy("url_hash")

@@ -203,7 +203,10 @@ FROM orders GROUP BY o_custkey ORDER BY cnt DESC, o_custkey LIMIT 600
 
 def q_filtered_search(spark, sf_dir):
     """F2 (terms) + F3 (size range) + F4 (date range) + O2 (offset pagination
-    over a deterministic sort; search/search.py:191-241)."""
+    over a deterministic sort; search/search.py:191-241).  (l_orderkey,
+    l_linenumber) is not unique in the generated tables, so l_quantity and
+    the ship date break its ties: rows still tied agree on every output
+    column, and the page is the same on any partitioning."""
     li = t(spark, sf_dir, "lineitem")
     filtered = li.filter(
         F.col("l_returnflag").isin("A", "R")
@@ -211,7 +214,9 @@ def q_filtered_search(spark, sf_dir):
         & (F.col("l_shipdate") >= "1996-01-01")
         & (F.col("l_shipdate") <= "1999-12-31")
     )
-    w = Window.orderBy(F.asc("l_orderkey"), F.asc("l_linenumber"))
+    w = Window.orderBy(
+        F.asc("l_orderkey"), F.asc("l_linenumber"), F.asc("l_quantity"), F.asc("ship_epoch")
+    )
     return (
         filtered.select(
             "l_orderkey", "l_linenumber", "l_quantity",
@@ -227,7 +232,7 @@ SQL_FILTERED_SEARCH = """
 WITH f AS (
   SELECT l_orderkey, l_linenumber, l_quantity,
          CAST(epoch(l_shipdate) AS BIGINT) AS ship_epoch,
-         row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS rn
+         row_number() OVER (ORDER BY l_orderkey, l_linenumber, l_quantity, l_shipdate) AS rn
   FROM lineitem
   WHERE l_returnflag IN ('A','R') AND l_quantity BETWEEN 10 AND 40
     AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate <= TIMESTAMP '1999-12-31')

@@ -61,8 +61,14 @@ def materialize_stats(files: DataFrame, path: str) -> str:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        list(pool.map(_write, STAT_FRAMES))
+    try:
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            list(pool.map(_write, STAT_FRAMES))
+    except BaseException:
+        # the pool has joined every write: drop the half-written version so
+        # no orphan dir outlives the failed commit (_LATEST never moved)
+        shutil.rmtree(os.path.join(path, vdir), ignore_errors=True)
+        raise
     tmp = os.path.join(path, "_LATEST.tmp")
     with open(tmp, "w") as f:
         f.write(vdir)

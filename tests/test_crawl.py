@@ -406,8 +406,152 @@ def test_checkpoint_writes_lineage_and_metrics(spark, world_dfs):
         seen_total = sum(r["rows"] for r in rows if r["table"] == "seen_append")
         assert seen_total == state.seen.count()
         assert all(r["token"].startswith((r["table"],)) for r in rows)
-        metrics = spark.read.parquet(os.path.join(rd, "metrics")).collect()[0]
+        metrics = fr._read_record(ckpt, state.round_no)["metrics"]
         assert metrics["urls_fetched"] == fetched.count()
+        assert metrics["round_sec"] == 1.5
+    finally:
+        purge_ckpt(spark, ckpt)
+
+
+def test_resume_reads_one_commit_record_per_round(spark, world_dfs, monkeypatch):
+    """A resume reads each committed round's `.done` record exactly once,
+    and every record holds the round's identity, its row counts and the
+    crawl's per-round metrics, each equal to what the round wrote."""
+    from od_database_spark import crawl
+
+    pages, robots, blacklist = world_dfs
+    ckpt = tempfile.mkdtemp(prefix="oddb_ckpt_rec_")
+    try:
+        crawl.run(
+            spark, world.gen_seeds(spark, N_HOSTS), pages, robots, blacklist,
+            ckpt_dir=ckpt, max_rounds=3, fetch=False,
+        )
+        reads = []
+        real = fr._read_record
+        monkeypatch.setattr(
+            fr, "_read_record", lambda d, r: reads.append(r) or real(d, r)
+        )
+        loaded = fr.load_checkpoint(spark, ckpt)
+        assert reads == [1, 2, 3] and loaded.round_no == 3
+        monkeypatch.undo()
+
+        table = spark.table(fr._seen_table_of(ckpt))
+        run_id = fr._read_pointer(ckpt, "_RUN")
+        for r in reads:
+            rec = fr._read_record(ckpt, r)
+            assert set(rec) == set(fr._RECORD_KEYS)
+            assert (rec["round_no"], rec["next_seq"], rec["run_id"]) == (r, 0, run_id)
+            rd = os.path.join(ckpt, f"round_{r:05d}")
+            od = os.path.join(ckpt, "outputs", f"round_{r:05d}")
+            assert rec["frontier_rows"] == spark.read.parquet(os.path.join(rd, "frontier")).count()
+            assert rec["seen_delta_rows"] == table.filter(F.col("round_no") == r).count()
+            m = rec["metrics"]
+            assert set(m) == {"urls_fetched", "images_found", "round_sec"}
+            assert m["urls_fetched"] == spark.read.parquet(os.path.join(od, "fetched")).count()
+            assert m["images_found"] == spark.read.parquet(os.path.join(od, "images")).count()
+        assert loaded.frontier_rows == loaded.frontier.count()
+    finally:
+        purge_ckpt(spark, ckpt)
+
+
+def test_old_marker_is_not_a_commit_record(spark, world_dfs, tmp_path):
+    """A `.done` holding the older layout's bare "ok" marker (round state in
+    meta/ parquet) is not a commit record: loading, resuming or compacting
+    such a dir raises instead of resuming blind."""
+    from od_database_spark import crawl
+
+    pages, robots, blacklist = world_dfs
+    seeds = world.gen_seeds(spark, N_HOSTS)
+    empty = spark.createDataFrame([], schema.SEEN)
+    ckpt = str(tmp_path / "old_marker")
+    try:
+        accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
+        state, _, _ = fr.expand_round(fr.initial_state(accepted), pages, robots)
+        state = fr.checkpoint(state, ckpt)
+        rd = os.path.join(ckpt, "round_00001")
+        spark.createDataFrame(
+            [(1, 0, fr._read_pointer(ckpt, "_RUN"))],
+            "round_no int, next_seq long, run_id string",
+        ).write.parquet(os.path.join(rd, "meta"))
+        with open(os.path.join(rd, ".done"), "w") as f:
+            f.write("ok")
+        assert fr.latest_round(ckpt) == 1
+        with pytest.raises(FileNotFoundError, match="not a round commit record"):
+            fr.load_checkpoint(spark, ckpt)
+        with pytest.raises(FileNotFoundError, match="not a round commit record"):
+            crawl.run(spark, seeds, pages, robots, blacklist, ckpt_dir=ckpt, resume=True)
+        with pytest.raises(FileNotFoundError, match="not a round commit record"):
+            fr.compact_checkpoints(spark, ckpt)
+        assert os.path.isdir(rd)  # the compactor deleted nothing
+    finally:
+        purge_ckpt(spark, ckpt)
+
+
+def test_leftover_record_tmp_leaves_round_uncommitted(spark, world_dfs, tmp_path):
+    """A crash inside the record write leaves `.done.tmp` and no `.done`:
+    that round is not committed, and a resume loads the round before it."""
+    pages, robots, blacklist = world_dfs
+    seeds = world.gen_seeds(spark, N_HOSTS)
+    empty = spark.createDataFrame([], schema.SEEN)
+    ckpt = str(tmp_path / "torn_record")
+    try:
+        accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
+        state, _, _ = fr.expand_round(fr.initial_state(accepted), pages, robots)
+        state = fr.checkpoint(state, ckpt)
+        want = {r["url"] for r in state.seen.collect()}
+        state2, _, _ = fr.expand_round(state, pages, robots)
+        fr.checkpoint(state2, ckpt)
+        rd = os.path.join(ckpt, "round_00002")
+        os.replace(os.path.join(rd, ".done"), os.path.join(rd, ".done.tmp"))
+        assert fr.latest_round(ckpt) == 1
+        loaded = fr.load_checkpoint(spark, ckpt)
+        assert loaded.round_no == 1
+        assert {r["url"] for r in loaded.seen.collect()} == want
+        with pytest.raises(FileNotFoundError, match="not committed"):
+            fr.load_checkpoint(spark, ckpt, round_no=2)
+    finally:
+        purge_ckpt(spark, ckpt)
+
+
+def _finished_jobs_after(spark, job_id):
+    """Finished Spark jobs with an id above ``job_id``, read from the status
+    store the way the benchmark's job accounting reads it."""
+    import json
+
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jvm = sc._jvm
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    scala_mod = getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$")
+    mapper.registerModule(getattr(scala_mod, "MODULE$"))
+    jobs = json.loads(mapper.writeValueAsString(sc._jsc.sc().statusStore().jobsList(None)))
+    return sorted(
+        j["jobId"] for j in jobs
+        if j["jobId"] > job_id and j.get("completionTime") is not None
+    )
+
+
+def test_checkpoint_round_trip_job_budget(spark, world_dfs, tmp_path):
+    """One checkpoint + load_checkpoint round trip without the bloom runs at
+    most 5 Spark jobs: the frontier write, the seen append (its bucket
+    shuffle and its write) and the lineage manifests (their one map stage
+    and their write).  The commit record and the loader's reads are
+    driver-side files, so they run none."""
+    pages, robots, blacklist = world_dfs
+    seeds = world.gen_seeds(spark, N_HOSTS)
+    empty = spark.createDataFrame([], schema.SEEN)
+    ckpt = str(tmp_path / "budget")
+    try:
+        accepted = fr.submit_seeds(spark, seeds, empty, blacklist, pages)
+        state = fr.initial_state(accepted)
+        for _ in range(2):
+            state, _, _ = fr.expand_round(state, pages, robots)
+            before = max(_finished_jobs_after(spark, -1), default=-1)
+            state = fr.checkpoint(state, ckpt)
+            loaded = fr.load_checkpoint(spark, ckpt)
+            jobs = _finished_jobs_after(spark, before)
+            assert 1 <= len(jobs) <= 5, (state.round_no, jobs)
+            assert loaded.frontier_rows == state.frontier_rows
     finally:
         purge_ckpt(spark, ckpt)
 

@@ -54,3 +54,23 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     ns, nd = normalize(spark_rows, spark_cols), normalize(duck_rows, duck_cols)
     mismatches = [(a, b) for a, b in zip(ns, nd) if a != b]
     assert not mismatches, mismatches[:3]
+
+
+def test_filtered_search_page_independent_of_partitioning(spark, sf_dir, duck):
+    """filtered_search's window order is total, so its page is one set of
+    rows on any shuffle partitioning, and it is the DuckDB oracle's page."""
+    fn, sql = REGISTRY["filtered_search"]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    pages = []
+    try:
+        for n in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            pages.append(sorted(tuple(r) for r in fn(spark, sf_dir).collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(pages[0]) == 50
+    assert pages[0] == pages[1]
+    cols = fn(spark, sf_dir).columns
+    duck_res = duck.execute(sql)
+    duck_cols = [d[0] for d in duck_res.description]
+    assert normalize(pages[0], cols) == normalize(duck_res.fetchall(), duck_cols)

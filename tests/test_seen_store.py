@@ -57,3 +57,35 @@ def test_append_preserves_bucketing_and_exactness(spark, seen_table):
     out = SS.filter_unseen_bucketed(spark, cand, seen_table)
     got = {r["canon_url"] for r in out.collect()}
     assert got == {f"http://h{i % 37}.t/d{i}/" for i in range(2500, 2600)}
+
+
+def test_append_writes_at_most_one_file_per_bucket(spark):
+    """An append hash-aligns its rows to the buckets first, so an
+    8-partition delta adds at most N_BUCKETS data files (not one per
+    (bucket, delta partition)), and the anti-join answer is unchanged."""
+    name = "seen_bucket_aligned_test"
+
+    def urls(lo, hi, parts):
+        return spark.range(lo, hi, 1, parts).select(
+            F.format_string("http://h%d.t/d%d/", F.pmod("id", F.lit(37)), F.col("id")).alias("url")
+        ).select("url", F.xxhash64("url").alias("url_hash"))
+
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    try:
+        SS.create_seen_table(urls(0, 2000, 8), name)
+        created = SS.data_file_count(spark, name)
+        assert created <= SS.N_BUCKETS
+        delta = urls(2000, 3000, 8)
+        assert delta.rdd.getNumPartitions() == 8
+        SS.append_seen(delta, name, round_no=1)
+        assert SS.data_file_count(spark, name) - created <= SS.N_BUCKETS
+        assert SS.seen_count(spark, name) == 3000
+        cand = _cands(spark, 2900, 3200)
+        got = {r["canon_url"] for r in SS.filter_unseen_bucketed(spark, cand, name).collect()}
+        assert got == {f"http://h{i % 37}.t/d{i}/" for i in range(3000, 3200)}
+        bounded = SS.filter_unseen_bucketed(spark, cand, name, round_no=0)
+        assert {r["canon_url"] for r in bounded.collect()} == {
+            f"http://h{i % 37}.t/d{i}/" for i in range(2900, 3200)
+        }
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")

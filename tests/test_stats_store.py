@@ -59,6 +59,29 @@ def test_reader_mid_commit_sees_previous_snapshot(spark, files_df, tmp_path):
     assert statsstore.read_stats(spark, path)["file_stats"].collect()[0]["count"] == 200
 
 
+def test_failed_frame_write_leaves_no_orphan_version(spark, files_df, tmp_path, monkeypatch):
+    """A frame write that raises must not leave its half-written version
+    dir behind, and the committed snapshot stays the live one."""
+    from od_database_spark.operators.search import global_stats
+
+    path = str(tmp_path / "stats")
+    v1 = statsstore.materialize_stats(files_df, path)
+
+    def failing_stats(files):
+        stats = global_stats(files)
+        stats["sizes_histogram"] = stats["sizes_histogram"].withColumn(
+            "boom", F.raise_error(F.lit("frame write failed"))
+        )
+        return stats
+
+    monkeypatch.setattr(statsstore, "global_stats", failing_stats)
+    with pytest.raises(Exception, match="frame write failed"):
+        statsstore.materialize_stats(files_df, path)
+    assert statsstore.snapshot_version(path) == v1
+    assert sorted(d for d in os.listdir(path) if d.startswith("v")) == [v1]
+    assert statsstore.read_stats(spark, path)["file_stats"].collect()[0]["count"] == 600
+
+
 def test_search_and_log_appends_reference_fields(spark, files_df, tmp_path):
     """Every search appends exactly one SearchLogEntry row with the
     reference's fields (init_script.sql:28-39): query, extensions, page,
