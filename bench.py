@@ -508,42 +508,30 @@ def run_crawl(spark, n_hosts: int) -> dict:
     }
 
 
-def _shuffle_write_bytes(spark) -> int | None:
-    """Total shuffle-write bytes across completed stages via the UI REST API
-    (the round-2 measurement method; None when the UI is disabled).  The
-    per-URL shuffle volume is the cluster-relevant frontier metric — it is
-    what crosses the network per scheduling round at 1000 executors, and it
-    is independent of this VM's memory-bus ceiling."""
-    import json as _json
-    import urllib.request
+def _shuffle_write_bytes(spark) -> int:
+    """Total shuffle-write bytes across completed stages, read from Spark's
+    in-process status store (perfbench/sparkstats.py; works with the UI
+    off).  The per-URL shuffle volume is the cluster-relevant frontier
+    metric — it is what crosses the network per scheduling round at 1000
+    executors, and it is independent of this VM's memory-bus ceiling."""
+    from perfbench.sparkstats import jobs
 
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return None
-    app = spark.sparkContext.applicationId
-    try:
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app}/stages?status=complete", timeout=10
-        ) as r:
-            stages = _json.loads(r.read())
-        return sum(int(s.get("shuffleWriteBytes", 0)) for s in stages)
-    except Exception:
-        return None
+    return int(sum(j["shuffle_write_bytes"] for j in jobs(spark.sparkContext)))
 
 
 def run_frontier_throughput(spark, n_urls: int, seen_mode: str = "df") -> dict:
     """Single-pass frontier-expansion throughput on a LARGE synthetic
     frontier (the 10^10-frontier stand-in): one politeness-ranked, link-
-    exploded, seen-filtered, densely-numbered expansion over n_urls pending
-    URLs against a seen set of the same order.  One pass amortizes per-round
-    fixed costs, so this measures operator throughput, which is what scales
-    with executors — the end-to-end mini-crawl (run_crawl) measures the
-    round machinery instead.
+    exploded, seen-filtered, packed_seq-numbered expansion over n_urls
+    pending URLs against a seen set of the same order.  One pass amortizes
+    per-round fixed costs, so this measures operator throughput, which is
+    what scales with executors — the end-to-end mini-crawl (run_crawl)
+    measures the round machinery instead.
 
     ``seen_mode``: 'df' anti-joins a plain seen DataFrame (both sides
     shuffle); 'table' anti-joins the BUCKETED seen_store table — the seen
     side reads co-located (zero exchange), only the candidates hash to the
-    bucket layout.  Both modes report shuffle-write B/URL when the UI is on."""
+    bucket layout.  Both modes report shuffle-write B/URL."""
     from pyspark.sql import functions as F
 
     from od_database_spark.operators import frontier as fr
@@ -589,7 +577,7 @@ def run_frontier_throughput(spark, n_urls: int, seen_mode: str = "df") -> dict:
         "host string, crawl_delay double, disallow_prefixes array<string>",
     )
 
-    def one_trial() -> tuple[float, int, int | None]:
+    def one_trial() -> tuple[float, int, int]:
         sb0 = _shuffle_write_bytes(spark)
         t0 = time.time()
         due, _carry, cutoffs = fr.politeness_select(frontier, robots, round_seconds=10**9)
@@ -613,8 +601,7 @@ def run_frontier_throughput(spark, n_urls: int, seen_mode: str = "df") -> dict:
         sb1 = _shuffle_write_bytes(spark)
         numbered.unpersist()
         cutoffs.unpersist()
-        sb = None if sb0 is None or sb1 is None else sb1 - sb0
-        return el, n_new, sb
+        return el, n_new, sb1 - sb0
 
     # best-of-3: this sandbox VM shows heavy CPU-steal noise (single runs
     # swing >50%), so the steady-state capability is the minimum.
@@ -640,12 +627,11 @@ def run_frontier_throughput(spark, n_urls: int, seen_mode: str = "df") -> dict:
         "trials_sec": [round(t, 2) for t, _n, _s in trials],
         "frontier_urls_per_sec": round(expanded / el, 1),
     }
-    if shuffle_b is not None:
-        # shuffle bytes are plan-determined (identical across trials up to
-        # AQE coalescing); B/URL uses the frontier size as denominator, the
-        # round-2 convention (BENCH.md 49.7→32.8)
-        out["shuffle_write_bytes"] = shuffle_b
-        out["shuffle_b_per_url"] = round(shuffle_b / n_urls, 1)
+    # shuffle bytes are plan-determined (identical across trials up to AQE
+    # coalescing); B/URL uses the frontier size as denominator, the round-2
+    # convention (BENCH.md 49.7→32.8)
+    out["shuffle_write_bytes"] = shuffle_b
+    out["shuffle_b_per_url"] = round(shuffle_b / n_urls, 1)
     if seen_table is not None:
         spark.sql(f"DROP TABLE IF EXISTS {seen_table}")
     return out
@@ -706,14 +692,12 @@ def run_seen_scale(spark, n_cand: int = 500_000, seen_sizes=(2_000_000, 8_000_00
                     el = time.time() - t0
                     sb1 = _shuffle_write_bytes(spark)
                     if best is None or el < best:
-                        best, bytes_best = el, (None if sb0 is None else sb1 - sb0)
+                        best, bytes_best = el, sb1 - sb0
                 row[label] = {
                     "sec": round(best, 2),
                     "unseen": n_out,
                     "shuffle_write_bytes": bytes_best,
-                    "shuffle_b_per_candidate": (
-                        None if bytes_best is None else round(bytes_best / n_cand, 1)
-                    ),
+                    "shuffle_b_per_candidate": round(bytes_best / n_cand, 1),
                 }
                 log(f"seen-scale {n_seen} {label}: {row[label]}")
             assert row["df"]["unseen"] == row["table"]["unseen"]  # exactness
@@ -789,13 +773,9 @@ def main() -> None:
     from od_database_spark.session import get_spark
 
     if args.crawl or args.frontier or args.fetch or args.sf10x or args.seenscale:
-        conf = {"spark.ui.showConsoleProgress": "false"}
-        if args.frontier or args.seenscale:
-            # the UI REST API is the shuffle-write-bytes source (B/URL)
-            conf["spark.ui.enabled"] = "true"
         spark = get_spark(
             app_name=f"oddb-bench-sub-{args.cpus}", cpus=args.cpus,
-            extra_conf=conf,
+            extra_conf={"spark.ui.showConsoleProgress": "false"},
         )
         if args.crawl:
             print(json.dumps(run_crawl(spark, args.hosts)), flush=True)

@@ -29,6 +29,11 @@ from pyspark.sql import functions as F
 from . import schema
 from .operators import fetch as fetch_ops
 from .operators import frontier as fr
+from .operators import seen_store
+
+# compact the ckpt dir's seen table once it holds more data files than eight
+# full-bucket appends write (each append adds at most N_BUCKETS files)
+COMPACT_FILES = 8 * seen_store.N_BUCKETS
 
 
 def _spill(df: DataFrame, path: str) -> tuple[DataFrame, int]:
@@ -64,7 +69,6 @@ def run(
     use_bloom: bool = True,
     expected_total_urls: int = 1_000_000,
     fetch: bool = True,
-    compact_every: int = 8,
 ) -> CrawlResult:
     """Submit the seed list (full dedup chain), run BFS rounds under the
     politeness budget until the frontier drains, then fetch+decode the
@@ -77,7 +81,9 @@ def run(
     With ``ckpt_dir`` set, the seen set after each round is the dir's
     bucketed seen table, so the exact anti-join reads it co-located (zero
     seen-side shuffle even off the bloom fallback path), and a resume
-    reads it bounded at the last committed round."""
+    reads it bounded at the last committed round.  Once the table holds
+    more than ``COMPACT_FILES`` data files (a driver-side listing, no Spark
+    job), the round's checkpoint is followed by a generation compaction."""
     if "robots_txt" in robots.columns:
         from .functions.robots import parse_robots
 
@@ -124,7 +130,7 @@ def run(
         image_urls.append(images)
         rounds += 1
         if ckpt_dir is not None:
-            bloom = state.bloom  # checkpoint() reloads from parquet (no bloom)
+            bloom = state.bloom  # checkpoint()'s reload builds no bloom
             state = fr.checkpoint(
                 state,
                 ckpt_dir,
@@ -134,7 +140,8 @@ def run(
                     "images_found": n_images,
                 },
             )
-            if compact_every and state.round_no > 0 and state.round_no % compact_every == 0:
+            table = fr._seen_table_of(ckpt_dir)
+            if seen_store.data_file_count(spark, table) > COMPACT_FILES:
                 # bound the seen table's file count on long crawls; the
                 # in-memory state reads the generation compaction drops, so
                 # reload from the surviving round

@@ -19,8 +19,8 @@ Scale notes (10^10 frontier):
   host.  Host skew is bounded: the window only needs the per-host TOP-budget
   rows, so we pre-prune with a salted partial rank before the exact window
   (two-phase top-k) — the mega-host never serializes a round.
-- The dense discovery sequence is computed with sorted-partition offsets
-  (zipWithIndex pattern), not a single-partition window.
+- The discovery sequence packs (round, range partition, position) into one
+  long (packed_seq): one range shuffle, not a single-partition window.
 """
 
 from __future__ import annotations
@@ -41,66 +41,15 @@ from ..functions.urls import parent_prefixes_col, with_canonical
 from . import seen as seen_ops
 
 ROUND_SECONDS = 60  # scheduling quantum: budget = floor(60 / crawl_delay)
+SKEW_SALT = 16  # politeness phase-1 buckets per host (see politeness_select)
 IMAGE_EXT_RE = r"\.(jpg|jpeg|png|bmp|gif)$"
-
-
-def dense_seq_counted(
-    df: DataFrame, order_cols: list, start: int = 0
-) -> tuple[DataFrame, int]:
-    """Add a dense, deterministic ``discovery_seq`` following ``order_cols``
-    without a single-partition window (the zipWithIndex pattern, parallel at
-    any scale): range-repartition on the sort key, freeze the partition id AS
-    A DATA COLUMN in a cache, then number each partition with a window and
-    add broadcast per-partition offsets.
-
-    The partition id must be cached as data: runtime partition ids
-    (TaskContext / spark_partition_id re-evaluated per job) are NOT stable
-    across jobs when AQE coalesces shuffle partitions.  AQE only merges
-    ADJACENT range partitions, so cached-pid order stays aligned with the
-    range order.  Fully native — no Python in the numbering path.
-    """
-    d = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
-    # monotonically_increasing_id = (partition id << 33) | record-number, so
-    # masking the low 33 bits yields the row's position in its (sorted)
-    # partition — no second sort, no window exchange.  Evaluated once into
-    # the cache so recomputation/AQE can't renumber.
-    tagged = d.select(
-        "*",
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)).alias("_pos"),
-    ).cache()
-    counts = tagged.groupBy("_pid").count().collect()  # materializes the cache
-    acc = start
-    off = []
-    for r in sorted(counts, key=lambda r: r["_pid"]):
-        off.append((int(r["_pid"]), acc))
-        acc += r["count"]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(off or [(0, start)], "_pid int, _base long")
-    )
-    out = (
-        tagged.join(off_df, on="_pid", how="inner")
-        .withColumn("discovery_seq", F.col("_base") + F.col("_pos"))
-        .drop("_pid", "_base", "_pos")
-    )
-    # Iterative callers (BFS rounds) would otherwise compound this plan every
-    # round until plan-tree handling itself blows up — cut lineage here and
-    # release the intermediate cache.
-    out = out.localCheckpoint(eager=True)
-    tagged.unpersist()
-    return out, acc - start
-
-
-def dense_seq(df: DataFrame, order_cols: list, start: int = 0) -> DataFrame:
-    return dense_seq_counted(df, order_cols, start)[0]
 
 
 def packed_seq(df: DataFrame, order_cols: list, round_no: int) -> DataFrame:
     """Order-preserving (NOT dense) ``discovery_seq`` in ONE pass:
     range-partition + sort, then pack (round, partition, position) into one
-    long.  Compared to dense_seq this skips the per-partition counts job, the
-    offsets broadcast join, and the extra cache materialization — the seq
+    long.  A dense numbering would need a per-partition counts job, an
+    offsets broadcast join and an extra cache materialization — the seq
     VALUES depend on sampled partition boundaries, but their ORDER always
     equals the sort order, which is the crawl-order contract (the reference's
     task ids are opaque too; only priority-then-FIFO dequeue order is
@@ -316,7 +265,6 @@ def politeness_select(
     frontier: DataFrame,
     robots: DataFrame,
     round_seconds: int = ROUND_SECONDS,
-    skew_salt: int = 16,
     max_broadcast_hosts: int | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Two-phase skew-safe politeness selection → (due, carry, aux).
@@ -357,7 +305,7 @@ def politeness_select(
         F.desc("priority"), F.asc("discovery_seq")
     )
     stage1 = (
-        budgeted.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(skew_salt)))
+        budgeted.withColumn("_salt", F.pmod(F.col("url_hash"), F.lit(SKEW_SALT)))
         .withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= F.col("_budget"))  # pre-prune inside the plan
     )
@@ -434,7 +382,7 @@ def expand_round(
     3. join the page table (synthetic network); redirects yield no links
     4. children: same-host subdirectories → next frontier (depth+1);
        image-extension files → image fetch set
-    5. enqueue-time dedup: anti-join vs seen; assign dense discovery_seq
+    5. enqueue-time dedup: anti-join vs seen; assign packed discovery_seq
     """
     # two-phase skew-safe selection (slim ranking + broadcast cutoffs); the
     # tiny cutoff checkpoint is unpersisted at the end of the round.  due and
@@ -550,7 +498,7 @@ def expand_round(
     # lineage management for the iterative loop: the frontier is small, so an
     # eager localCheckpoint per round keeps the next round's window/rank plan
     # shallow; the seen set stays a flat union of per-round checkpointed
-    # deltas (numbered is checkpointed inside dense_seq) — linear plan, no
+    # deltas (numbered is checkpointed inside packed_seq) — linear plan, no
     # per-round copy.  Durable cuts happen in checkpoint().
     next_frontier = carry.unionByName(
         numbered.select("url", "url_hash", "website_id", "host", "priority", "depth", "discovery_seq")

@@ -1,20 +1,15 @@
 """Multimodal columns: opaque binary payloads + typed metadata, processed in
 Arrow batches (training-data pipeline requirement).
 
-Images are fully real (pure-numpy codecs in datagen.images), and so is
-UNCOMPRESSED AUDIO: WAV/RIFF PCM payloads decode through the pure-numpy
-codec in datagen.audio — extract_audio_features is a real operator for
-meta.fmt == 'wav'.  Compressed audio and video decoding need codec libraries
-this container doesn't ship, so those paths are STUBBED: the Spark-side
-plumbing — schema, partitioning, UDF signature, batch shape — is real and
-tested, and the stub raises NotImplementedError unless the caller opts into
-the deterministic fake (decode_stub='fake'), which synthesizes metadata from
-a hash of the payload.
+The crawl's payload is the image, and the image path is fully real
+(pure-numpy codecs in datagen.images): decode to features, resize, and
+embed for the ANN store.  The media table keeps a ``modality`` column;
+decode_image_features and resize_images read only ``modality == 'image'``
+rows, so other payloads in the same table are skipped.
 """
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -39,15 +34,9 @@ IMAGE_FEATURES = (
     "media_id string, modality string, w int, h int, mean_r double, "
     "mean_g double, mean_b double, phash long"
 )
-AUDIO_FEATURES = (
-    "media_id string, modality string, sample_rate int, n_samples long, rms double"
-)
-VIDEO_FRAME_SAMPLE = (
-    "media_id string, modality string, frame_idx int, frame_phash long"
-)
 
 
-def decode_image_features(media: DataFrame, batch_size: int = 128) -> DataFrame:
+def decode_image_features(media: DataFrame) -> DataFrame:
     """Real path: decode image payloads (png/bmp/fake-jpeg), emit dimensions,
     channel means and a perceptual hash.  mapInPandas so one partition
     processes many rows per Arrow batch — no per-row Python dispatch."""
@@ -144,113 +133,3 @@ def resize_images(media: DataFrame, w: int, h: int) -> DataFrame:
             yield pd.DataFrame(out)
 
     return media.filter(F.col("modality") == "image").mapInPandas(run, schema=MEDIA)
-
-
-def _fake_u64(payload: bytes, salt: str) -> int:
-    return int.from_bytes(
-        hashlib.sha256(salt.encode() + bytes(payload or b"")).digest()[:8], "little"
-    )
-
-
-def extract_audio_features(media: DataFrame, decode_stub: str = "raise") -> DataFrame:
-    """REAL for WAV: meta.fmt == 'wav' payloads decode through the pure-numpy
-    RIFF/PCM codec (datagen.audio) and emit true sample_rate / n_samples /
-    rms.  Compressed formats still need a codec library this container lacks:
-    decode_stub='raise' (default) raises NotImplementedError for them;
-    'fake' emits deterministic hash-derived metadata so the pipeline shape
-    stays testable."""
-    from ..datagen import audio as au
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                fmt = (r.meta or {}).get("fmt", "")
-                if fmt == "wav":
-                    rate, samples = au.decode_wav(bytes(r.payload))
-                    out.append(
-                        {
-                            "media_id": r.media_id,
-                            "modality": r.modality,
-                            "sample_rate": rate,
-                            "n_samples": len(samples),
-                            "rms": round(au.rms_of(samples), 6),
-                        }
-                    )
-                elif decode_stub == "raise":
-                    raise NotImplementedError(
-                        f"audio decode for fmt={fmt!r} requires a codec library "
-                        "(e.g. soundfile/ffmpeg) not present in this environment"
-                    )
-                else:
-                    h = _fake_u64(r.payload, "audio")
-                    out.append(
-                        {
-                            "media_id": r.media_id,
-                            "modality": r.modality,
-                            "sample_rate": 8000 + (h % 5) * 8000,
-                            "n_samples": (h >> 8) % 10**6,
-                            "rms": round((h % 10**4) / 10**4, 6),
-                        }
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["media_id", "modality", "sample_rate", "n_samples", "rms"],
-            )
-
-    return media.filter(F.col("modality") == "audio").mapInPandas(
-        run, schema=AUDIO_FEATURES
-    )
-
-
-def sample_video_frames(
-    media: DataFrame, every_n: int = 10, decode_stub: str = "raise"
-) -> DataFrame:
-    """REAL for the odv frame container: meta.fmt == 'odv' payloads walk the
-    container, decode every n-th PNG frame for real and emit its perceptual
-    hash — one output row per sampled frame (row-expanding mapInPandas).
-    Compressed video still needs ffmpeg/pyav this container lacks:
-    decode_stub='raise' (default) raises for those; 'fake' emits
-    deterministic hash-derived rows so the pipeline shape stays testable."""
-    from ..datagen import video as vid
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                fmt = (r.meta or {}).get("fmt", "")
-                if fmt == "odv":
-                    for idx, px in vid.decode_frames(bytes(r.payload)):
-                        if idx % every_n == 0:
-                            out.append(
-                                {
-                                    "media_id": r.media_id,
-                                    "modality": r.modality,
-                                    "frame_idx": idx,
-                                    "frame_phash": im.phash64(px),
-                                }
-                            )
-                elif decode_stub == "raise":
-                    raise NotImplementedError(
-                        f"video decode for fmt={fmt!r} requires ffmpeg/pyav, "
-                        "not present in this environment"
-                    )
-                else:
-                    h = _fake_u64(r.payload, "video")
-                    n_frames = 30 + h % 120
-                    for idx in range(0, n_frames, every_n):
-                        out.append(
-                            {
-                                "media_id": r.media_id,
-                                "modality": r.modality,
-                                "frame_idx": idx,
-                                "frame_phash": (_fake_u64(r.payload, f"f{idx}") % (1 << 63)),
-                            }
-                        )
-            yield pd.DataFrame(
-                out, columns=["media_id", "modality", "frame_idx", "frame_phash"]
-            )
-
-    return media.filter(F.col("modality") == "video").mapInPandas(
-        run, schema=VIDEO_FRAME_SAMPLE
-    )

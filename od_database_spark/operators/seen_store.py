@@ -13,16 +13,18 @@ hash-aligns its rows to the buckets first, so it adds at most one file per
 bucket.
 
 Rows carry a ``round_no`` column so the table can serve as the crawl
-loop's DURABLE ground truth: frontier.checkpoint() is its only writer in
-the crawl, appending each round's new urls stamped with the round before
-the round's ``.done`` commit record, and a resume reads ``round_no <= last
-committed round`` — rows appended by a round that crashed before its
-``.done`` record are excluded by the filter (and the re-run's re-append only
-duplicates rows, which a left_anti join ignores).  Every append writes
-files whose round_no is constant, so the parquet min/max footer makes the
-resume filter a file-level prune, not a scan.  Correctness never depends
-on the hash: the join keys include the full url string, so hash collisions
-can never drop a URL.
+loop's DURABLE ground truth: frontier.checkpoint() appends each round's new
+urls stamped with the round before the round's ``.done`` commit record,
+and a resume reads ``round_no <= last committed round`` — rows appended by
+a round that crashed before its ``.done`` record are excluded by the filter
+(and the re-run's re-append only duplicates rows, which a left_anti join
+ignores).  The streaming dedup sink (streaming/dedup.py) keeps its seen
+table in the same layout, with the micro-batch epoch as ``round_no``.  This
+module issues every seen-table write; its callers never write one
+themselves.  Every append writes files whose round_no is constant, so the
+parquet min/max footer makes the resume filter a file-level prune, not a
+scan.  Correctness never depends on the hash: the join keys include the
+full url string, so hash collisions can never drop a URL.
 """
 
 from __future__ import annotations
@@ -95,9 +97,11 @@ def recover_seen_table(spark: SparkSession, table: str, n_buckets: int = N_BUCKE
     """Cross-session resume: the table is durable state but the default
     in-memory catalog forgets it when the session dies — files survive under
     the warehouse while tableExists() is False.  Re-register the surviving
-    data with the original bucket spec (the streaming/dedup.py recovery
-    pattern; NEVER drop — dropping the seen set would re-admit every URL
-    ever deduplicated).  Returns True iff the table is registered."""
+    data with the original bucket spec, so the anti-join keeps both its
+    state and its zero-shuffle layout.  NEVER drop (ann_store._drop_stale
+    drops on that collision, right for a rebuildable index, wrong here):
+    dropping the seen set would re-admit every URL ever deduplicated.
+    Returns True iff the table is registered."""
     if spark.catalog.tableExists(table):
         return True
     from .ann_store import _fs, _table_dir
@@ -140,18 +144,14 @@ def seen_count(spark: SparkSession, table: str) -> int:
 
 def data_file_count(spark: SparkSession, table: str) -> int:
     """Committed data files under the table location (listing-cost proxy —
-    the thing per-round appends grow by one file set per bucket)."""
+    the thing per-round appends grow by one file set per bucket).  crawl.run
+    asks every round, so the count is one glob call into the JVM (it skips
+    ``_SUCCESS``, ``_temporary`` and ``.crc`` entries), not a py4j round
+    trip per file."""
     from .ann_store import _fs, _table_dir
 
-    loc = _table_dir(spark, table)
-    fs, jpath = _fs(spark, loc)
-    if not fs.exists(jpath):
-        return 0
-    return sum(
-        1
-        for s in fs.listStatus(jpath)
-        if not s.getPath().getName().startswith(("_", "."))
-    )
+    fs, jpath = _fs(spark, _table_dir(spark, table) + "/[^_.]*")
+    return len(fs.globStatus(jpath) or [])
 
 
 def compact_into_generation(

@@ -4,18 +4,19 @@ suppresses duplicate URLs with the same guarantees as crawl rounds.
 
 Per micro-batch (foreachBatch):
   1. canonicalize + in-batch dedup,
-  2. exact anti-join against the durable BUCKETED seen table
-     (operators/seen_store.py layout: the 10^10-row seen side never
-     shuffles; the micro-batch exchanges once on url_hash),
-  3. append the new urls (stamped with the micro-batch epoch) to the table,
+  2. exact anti-join against the durable BUCKETED seen table — the crawl's
+     layout and code (operators/seen_store.py: the 10^10-row seen side
+     never shuffles; the micro-batch exchanges once on url_hash),
+  3. append the new urls to the table through seen_store.append_seen, with
+     the micro-batch epoch as their ``round_no``,
   4. materialize the epoch's output from the TABLE, not from step 2.
 
 Step 4 is what makes replay safe: foreachBatch is at-least-once, so a batch
 can re-run after a crash.  On replay the anti-join finds nothing new (the
 previous attempt's rows are already in the table), the append is a no-op,
-and the epoch output regenerates identically from the table's epoch column
-— every write is idempotent, giving the exactly-once outcome the reference's
-indexer retry loop (tasks.py:93-112) only approximates.
+and the epoch output regenerates identically from the table's round_no
+column — every write is idempotent, giving the exactly-once outcome the
+reference's indexer retry loop (tasks.py:93-112) only approximates.
 """
 
 from __future__ import annotations
@@ -29,8 +30,6 @@ from ..operators import seen_store
 
 URL_STREAM = T.StructType([T.StructField("url", T.StringType(), False)])
 
-N_BUCKETS = 16
-
 
 def stream_urls(spark: SparkSession, in_dir: str) -> DataFrame:
     """File-source stream of discovered URLs (one JSON object per line)."""
@@ -41,43 +40,7 @@ def stream_urls(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
-def _recover_seen_table(spark: SparkSession, seen_table: str, n_buckets: int) -> bool:
-    """Cross-session resume: the seen table is DURABLE state, but Spark's
-    default in-memory catalog forgets it when the session dies — the files
-    survive under the warehouse while tableExists() returns False, and a
-    naive append-mode saveAsTable then turns into a CREATE that dies with
-    LOCATION_ALREADY_EXISTS.  (ann_store._drop_stale handles that collision
-    by DROPPING — correct for a rebuildable index cache, catastrophic here:
-    dropping the seen set would re-admit every URL ever deduplicated.)
-
-    Instead, when the catalog entry is missing but the location holds files,
-    RE-REGISTER the surviving data as a table with the original bucket spec,
-    so the anti-join keeps both its state and its zero-shuffle layout.
-    Returns True iff the table is registered (pre-existing or recovered)."""
-    if spark.catalog.tableExists(seen_table):
-        return True
-    from ..operators.ann_store import _fs, _table_dir
-
-    loc = _table_dir(spark, seen_table)
-    fs, jpath = _fs(spark, loc)
-    if not fs.exists(jpath):
-        return False  # genuinely no prior state
-    entries = fs.listStatus(jpath)
-    if not any(not s.getPath().getName().startswith(("_", ".")) for s in entries):
-        # only a torn write's _temporary droppings — NOT committed state;
-        # clean them so the CREATE path can recreate the location
-        fs.delete(jpath, True)
-        return False
-    spark.sql(
-        f"""CREATE TABLE {seen_table} (url STRING, url_hash BIGINT, epoch BIGINT)
-            USING parquet
-            CLUSTERED BY (url_hash) SORTED BY (url_hash) INTO {n_buckets} BUCKETS
-            LOCATION '{loc}'"""
-    )
-    return True
-
-
-def dedup_sink(seen_table: str, out_dir: str, n_buckets: int = N_BUCKETS):
+def dedup_sink(seen_table: str, out_dir: str):
     """foreachBatch sink implementing the idempotent dedup protocol above.
     The epoch output lands at ``{out_dir}/epoch={epoch_id}`` (overwrite —
     replay-stable)."""
@@ -85,25 +48,16 @@ def dedup_sink(seen_table: str, out_dir: str, n_buckets: int = N_BUCKETS):
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         cand = with_canonical(batch_df).dropDuplicates(["canon_url"])
-        if _recover_seen_table(spark, seen_table, n_buckets):
+        # a table that survived a dead session is re-registered, never dropped
+        if seen_store.recover_seen_table(spark, seen_table):
             new = seen_store.filter_unseen_bucketed(spark, cand, seen_table)
         else:
             new = cand
-        rows = new.select(
-            F.col("canon_url").alias("url"),
-            "url_hash",
-            F.lit(int(epoch_id)).cast("long").alias("epoch"),
-        )
-        (
-            rows.write.mode("append")
-            .bucketBy(n_buckets, "url_hash")
-            .sortBy("url_hash")
-            .format("parquet")
-            .saveAsTable(seen_table)
-        )
+        rows = new.select(F.col("canon_url").alias("url"), "url_hash")
+        seen_store.append_seen(rows, seen_table, round_no=epoch_id)
         (
             spark.table(seen_table)
-            .filter(F.col("epoch") == int(epoch_id))
+            .filter(F.col("round_no") == int(epoch_id))
             .select("url", "url_hash")
             .write.mode("overwrite")
             .parquet(f"{out_dir}/epoch={epoch_id}")

@@ -583,21 +583,6 @@ def test_bloom_crawl_equals_exact_crawl(spark, world_dfs):
     assert flat(fetched_all) == flat(base[2])
 
 
-def test_dense_seq_exact_numbering(spark):
-    """dense_seq (the exact dense-id variant kept alongside packed_seq) must
-    number rows 0..n-1 in sort order regardless of input partitioning."""
-    import random
-
-    rows = [(1 + i % 3, i, f"u{i}") for i in range(500)]
-    random.Random(3).shuffle(rows)
-    df = spark.createDataFrame(rows, "priority int, k long, url string").repartition(7)
-    out, n = fr.dense_seq_counted(df, [F.desc("priority"), F.asc("k")], start=10)
-    assert n == 500
-    got = sorted((r["discovery_seq"], -r["priority"], r["k"]) for r in out.collect())
-    assert [g[0] for g in got] == list(range(10, 510))
-    assert got == sorted(got, key=lambda g: (g[1], g[2]))  # seq follows sort key
-
-
 def test_checkpoint_writes_delta_not_full_copy(spark, world_dfs):
     """Write-amplification contract: round k's checkpoint appends to the
     seen table only the urls discovered since the previous checkpoint,

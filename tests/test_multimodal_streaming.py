@@ -1,13 +1,11 @@
-"""Multimodal plumbing (real image path, stubbed audio/video) + streaming
-ingest smoke (SURVEY.md §2.10 analog)."""
+"""Multimodal plumbing (the image path; other modalities in the media table
+are skipped) + streaming ingest smoke (SURVEY.md §2.10 analog)."""
 
 import json
 import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.utils import PythonException
 
 from od_database_spark.datagen import images as im
 from od_database_spark.operators import multimodal as M
@@ -41,24 +39,6 @@ def test_resize_roundtrip(media):
     assert len(out) == 6
     px = im.decode_png(bytes(out[0]["payload"]))
     assert px.shape == (16, 16, 3)
-
-
-def test_audio_stub_raises_by_default(media):
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        M.extract_audio_features(media).collect()
-
-
-def test_audio_fake_is_deterministic(media):
-    a = M.extract_audio_features(media, decode_stub="fake").collect()
-    b = M.extract_audio_features(media, decode_stub="fake").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert a[0]["sample_rate"] in (8000, 16000, 24000, 32000, 40000)
-
-
-def test_video_frame_sampling_shape(media):
-    frames = M.sample_video_frames(media, every_n=10, decode_stub="fake").collect()
-    assert len(frames) >= 3  # row-expanding: multiple frames per video
-    assert all(r["frame_idx"] % 10 == 0 for r in frames)
 
 
 def test_streaming_ingest_available_now(spark):

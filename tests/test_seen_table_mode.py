@@ -267,10 +267,11 @@ def test_table_mode_seen_side_never_shuffles(spark, world_dfs):
         purge_table(spark, TABLE)
 
 
-def test_crawl_run_table_mode_with_compaction(spark, world_dfs, tmp_path):
-    """crawl.run end-to-end with a ckpt dir and in-crawl compaction
-    (compact_every): identical fetched set vs the uncheckpointed run, and
-    the final state reads a rolled generation of the dir's seen table."""
+def test_crawl_run_table_mode_with_compaction(spark, world_dfs, tmp_path, monkeypatch):
+    """crawl.run end-to-end with a ckpt dir and in-crawl compaction (the
+    seen table's file-count trigger, lowered so a short crawl crosses it):
+    identical fetched set vs the uncheckpointed run, and the final state
+    reads a rolled generation of the dir's seen table."""
     from od_database_spark import crawl
 
     pages, robots, blacklist = world_dfs
@@ -280,9 +281,12 @@ def test_crawl_run_table_mode_with_compaction(spark, world_dfs, tmp_path):
         base = crawl.run(
             spark, seeds, pages, robots, blacklist, fetch=False, use_bloom=False,
         )
+        # this 4-round crawl never nears 8 full bucket sets: compact after
+        # every round instead
+        monkeypatch.setattr(crawl, "COMPACT_FILES", 0)
         tbl = crawl.run(
             spark, seeds, pages, robots, blacklist, fetch=False, use_bloom=False,
-            ckpt_dir=ck, compact_every=2,
+            ckpt_dir=ck,
         )
         assert tbl.rounds == base.rounds
         assert tbl.urls_fetched == base.urls_fetched

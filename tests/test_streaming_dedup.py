@@ -7,32 +7,20 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
+from od_database_spark.operators import seen_store
 from od_database_spark.streaming import dedup as SD
 
-
-def _purge_table(spark, table):
-    """Drop the catalog entry AND the warehouse files: a recovered seen
-    table is EXTERNAL (registered over surviving files), so DROP alone
-    leaves data behind — which the durable-state recovery would then happily
-    resurrect into the next test."""
-    from urllib.parse import urlparse
-
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = urlparse(
-        spark.conf.get("spark.sql.warehouse.dir").rstrip("/") + "/" + table
-    ).path
-    shutil.rmtree(loc, ignore_errors=True)
+from .seen_tables import purge_table
 
 
 @pytest.fixture()
 def dirs(spark):
     d = tempfile.mkdtemp(prefix="oddb_sdedup_")
     table = "stream_seen_test"
-    _purge_table(spark, table)
+    purge_table(spark, table)
     yield d, table
-    _purge_table(spark, table)
+    purge_table(spark, table)
     shutil.rmtree(d, ignore_errors=True)
 
 
@@ -98,6 +86,37 @@ def test_sink_replay_is_idempotent(spark, dirs):
     sink(batch2, 8)
     assert spark.table(table).count() == 60
     assert spark.read.parquet(f"{out_dir}/epoch=8").count() == 20
+
+
+def test_streamed_seen_table_has_seen_store_layout(spark, dirs):
+    """The sink writes through seen_store: the streamed table has the
+    crawl's seen-table layout (N_BUCKETS buckets on url_hash, a round_no
+    column holding the micro-batch epoch), and one micro-batch's append
+    adds at most N_BUCKETS data files whatever the batch's partitioning."""
+    d, table = dirs
+    sink = SD.dedup_sink(table, f"{d}/out")
+
+    def batch(tag, n):
+        return spark.createDataFrame(
+            [(f"http://h{i}.t/{tag}/",) for i in range(n)], "url string"
+        ).repartition(8)
+
+    sink(batch("x", 200), 3)
+    detail = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
+    }
+    assert detail["Num Buckets"] == str(seen_store.N_BUCKETS)
+    assert detail["Bucket Columns"] == "[`url_hash`]"
+    before = seen_store.data_file_count(spark, table)
+    assert 0 < before <= seen_store.N_BUCKETS
+    sink(batch("y", 500), 4)
+    assert 0 < seen_store.data_file_count(spark, table) - before <= seen_store.N_BUCKETS
+    per_epoch = {
+        r["round_no"]: r["count"]
+        for r in spark.table(table).groupBy("round_no").count().collect()
+    }
+    assert per_epoch == {3: 200, 4: 500}
 
 
 def test_cross_session_resume_recovers_seen_table(spark, dirs):
